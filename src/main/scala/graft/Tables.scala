@@ -142,10 +142,12 @@ object Util {
     * run directory is wiped on first use (pid recycling must not inherit a
     * dead run's state). NO exit-time deletion: the DuckDB oracle reads the
     * CSV/FITS fixtures AFTER the Verify JVM exits — instead, each new run
-    * sweeps sibling run dirs that have been untouched for >6h.
+    * sweeps sibling run dirs that have been untouched for >6h. Run dirs
+    * live under `java.io.tmpdir` (`/tmp` by default on Linux).
     */
   private lazy val runRoot: java.io.File = {
-    val root = new java.io.File(s"/tmp/graft_run_${ProcessHandle.current().pid()}")
+    val root = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft_run_${ProcessHandle.current().pid()}")
     deleteRecursively(root)
     Option(root.getParentFile.listFiles()).foreach(_.foreach { f =>
       if (f.getName.startsWith("graft_run_") &&

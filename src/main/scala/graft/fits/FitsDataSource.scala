@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -22,10 +23,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - Schema comes from the extension HEADER (driver-side, one footer-like
   *    read) — never inferred from data, matching the FITS model (§1.1).
   *  - Fixed record width ⇒ EXACT row-range splits: `planInputPartitions`
-  *    cuts [0, NAXIS2) into ranges sized by `maxSplitBytes`, so a single
-  *    100 GB BINTABLE parallelizes across executors with no scan overlap —
-  *    the property parquet gets from row groups, FITS gets for free from
-  *    NAXIS1.
+  *    cuts [0, NAXIS2) into near-equal ranges, so a single 100 GB BINTABLE
+  *    parallelizes across executors with no scan overlap — the property
+  *    parquet gets from row groups, FITS gets for free from NAXIS1. Split
+  *    size follows Spark's file sources (`FilePartition.maxSplitBytes`):
+  *    min(`spark.sql.files.maxPartitionBytes`, max(
+  *    `spark.sql.files.openCostInBytes`, (Σ data bytes + files · openCost)
+  *    / default parallelism)), so one large table is cut into one split per
+  *    core and a file under openCost stays whole.
   *  - Column pruning is honored at the byte level: only requested columns
   *    are decoded (per-column fixed offsets), the rest of each record is
   *    skipped — SupportsPushDownRequiredColumns.
@@ -124,7 +129,15 @@ object FitsTable {
   // Spark's file sources use; a same-size rewrite inside one mtime tick
   // is below its resolution for them and for us.
   private val specCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int), ((Long, Long), FitsSpecWithOffset)]()
+    (String, Int), Header]()
+
+  /** One cached header read. Besides the spec it keeps what split planning
+    * needs, taken from the same `getFileStatus`: the file length (for the
+    * truncation check) and the data unit size, NAXIS1·NAXIS2 + PCOUNT (for
+    * split sizing; for a tiled table this includes the compressed heap).
+    */
+  private[fits] final case class Header(len: Long, mtime: Long,
+      swo: FitsSpecWithOffset, dataBytes: Long)
 
   /** Gzipped members are read through a decompressing stream; offsets in
     * the spec are positions in the DECOMPRESSED byte stream (locateTable
@@ -133,13 +146,16 @@ object FitsTable {
   def isGzip(path: String): Boolean = path.endsWith(".gz")
 
   /** Driver-side header read: spec + absolute data offset. */
-  def readSpec(path: String, extnum: Int): FitsSpecWithOffset = {
+  def readSpec(path: String, extnum: Int): FitsSpecWithOffset =
+    header(path, extnum).swo
+
+  private[fits] def header(path: String, extnum: Int): Header = {
     val p = new Path(path)
     val fs = p.getFileSystem(driverHadoopConf())
     val st = fs.getFileStatus(p)
-    val fp = (st.getLen, st.getModificationTime)
     specCache.compute((path, extnum), { (_, old) =>
-      if (old != null && old._1 == fp) old
+      if (old != null && old.len == st.getLen &&
+        old.mtime == st.getModificationTime) old
       else {
         val raw = fs.open(p)
         try {
@@ -150,10 +166,12 @@ object FitsTable {
               new java.io.DataInputStream(new java.util.zip.GZIPInputStream(raw))
             else raw
           val (cards, dataStart) = FitsFormat.locateTable(in, extnum)
-          (fp, FitsSpecWithOffset(FitsFormat.anySpec(cards), dataStart))
+          Header(st.getLen, st.getModificationTime,
+            FitsSpecWithOffset(FitsFormat.anySpec(cards), dataStart),
+            FitsFormat.dataUnitBytes(cards))
         } finally raw.close()
       }
-    })._2
+    })
   }
 
   /** The session's Hadoop conf (spark.hadoop.*, core-site) — a bare
@@ -218,52 +236,73 @@ object FitsScan {
     * may differ in widths — e.g. 16A vs 25A — as long as the Spark schemas
     * agree, which is required here against `firstSchema`). Shared by the
     * batch plan and the micro-batch stream's per-trigger plan.
+    *
+    * Each non-gzip file is cut into ceil(dataBytes / `maxSplitBytes`)
+    * near-equal ranges; `rowsPerSplitOpt` overrides that with ranges of a
+    * fixed row count. Tiled tables split on TILE boundaries (each tile
+    * decompresses independently): rowStart/rowEnd are TILE indices there,
+    * the reader expands each stored row to its tileLen logical rows, and
+    * `rowsPerSplitOpt` counts LOGICAL rows, rounded up to whole tiles.
+    * gzip is not splittable (same rule as every gzip source in Spark): one
+    * partition per .gz member, however many rows it holds.
     */
   def splitsFor(files: Seq[String], extnum: Int,
       firstSchema: StructType, rowsPerSplitOpt: Option[Long]): Array[InputPartition] = {
-    val targetBytes = 128L * 1024 * 1024 // align with files.maxPartitionBytes default
-    files.toArray.flatMap { p =>
-      val pswo = FitsTable.readSpec(p, extnum)
-      require(pswo.spec.schema == firstSchema,
-        s"FITS multi-file load: '$p' decodes to ${pswo.spec.schema.simpleString}, " +
+    val headers = files.map { p =>
+      val h = FitsTable.header(p, extnum)
+      require(h.swo.spec.schema == firstSchema,
+        s"FITS multi-file load: '$p' decodes to ${h.swo.spec.schema.simpleString}, " +
           s"but the source schema is ${firstSchema.simpleString}")
-      val spec = pswo.spec
-      // gzip is not splittable (same rule as every gzip source in Spark):
-      // one partition per .gz member, however many rows it holds —
-      // parallelism across FILES, never within one
-      spec match {
-        case ts: FitsFormat.TiledTableSpec =>
-          // tiled tables split on TILE boundaries (each tile decompresses
-          // independently): rowStart/rowEnd are TILE indices here, and the
-          // reader expands each stored row to its tileLen logical rows.
-          // rowsPerSplitOpt is interpreted in LOGICAL rows, rounded up to
-          // whole tiles, so callers can force multi-partition plans.
-          val tilesPerSplit =
-            if (FitsTable.isGzip(p)) math.max(1L, ts.nTiles)
-            else {
-              val wanted = rowsPerSplitOpt
-                .map(r => (r + ts.tileLen - 1) / ts.tileLen)
-                .getOrElse(targetBytes /
-                  math.max(1L, ts.tileLen * math.max(1, ts.zRowBytes)))
-              math.max(1L, wanted)
-            }
-          Iterator.iterate(0L)(_ + tilesPerSplit)
-            .takeWhile(_ < ts.nTiles)
-            .map(start => FitsInputPartition(p, pswo, start,
-              math.min(start + tilesPerSplit, ts.nTiles)): InputPartition)
-            .toArray
-        case _ =>
-          val rowsPerSplit =
-            if (FitsTable.isGzip(p)) math.max(1L, spec.nRows)
-            else rowsPerSplitOpt.getOrElse(
-              math.max(1L, targetBytes / math.max(1, spec.rowBytes)))
-          Iterator.iterate(0L)(_ + rowsPerSplit)
-            .takeWhile(_ < spec.nRows)
-            .map(start => FitsInputPartition(p, pswo, start,
-              math.min(start + rowsPerSplit, spec.nRows)): InputPartition)
-            .toArray
-      }
+      // a short file would otherwise surface as a bare EOFException in
+      // whichever task's range crosses the cut; gzip members are measured
+      // compressed, so their length says nothing about the data unit
+      val required = h.swo.dataStart + h.dataBytes
+      if (!FitsTable.isGzip(p) && h.len < required)
+        throw new IllegalArgumentException(
+          s"FITS file '$p' is truncated: table extension #$extnum needs " +
+            s"$required bytes (data unit ${h.dataBytes} B at offset " +
+            s"${h.swo.dataStart}), but the file has ${h.len}")
+      (p, h)
     }
+    val maxSplit = maxSplitBytes(headers.map(_._2.dataBytes))
+    headers.toArray.flatMap { case (p, h) =>
+      val (units, unitsPerSplitOpt) = h.swo.spec match {
+        case ts: FitsFormat.TiledTableSpec =>
+          (ts.nTiles, rowsPerSplitOpt.map(r => ceilDiv(r, ts.tileLen)))
+        case spec => (spec.nRows, rowsPerSplitOpt)
+      }
+      val bounds: Seq[Long] =
+        if (units <= 0) Nil
+        else if (FitsTable.isGzip(p)) Seq(0L, units)
+        else unitsPerSplitOpt match {
+          case Some(per) =>
+            val step = math.max(1L, per)
+            (0L until units by step) :+ units
+          case None =>
+            // near-equal: the first (units % n) ranges take one extra unit
+            val n = math.min(units, math.max(1L, ceilDiv(h.dataBytes, maxSplit)))
+            (0L to n).map(i => (units / n) * i + math.min(i, units % n))
+        }
+      bounds.sliding(2).collect { case Seq(a, b) =>
+        FitsInputPartition(p, h.swo, a, b): InputPartition
+      }.toArray
+    }
+  }
+
+  private def ceilDiv(a: Long, b: Long): Long = (a + b - 1) / b
+
+  /** Spark's `FilePartition.maxSplitBytes`, with each file's data unit in
+    * place of its length: files under `openCostInBytes` stay whole, and
+    * the bytes are otherwise spread over the default parallelism, capped
+    * at `maxPartitionBytes`.
+    */
+  private def maxSplitBytes(dataBytes: Seq[Long]): Long = {
+    val conf = org.apache.spark.sql.internal.SQLConf.get
+    val openCost = conf.filesOpenCostInBytes
+    val cores = org.apache.spark.sql.SparkSession.getActiveSession
+      .map(_.sparkContext.defaultParallelism).getOrElse(1)
+    val bytesPerCore = dataBytes.map(_ + openCost).sum / cores
+    math.min(conf.filesMaxPartitionBytes, math.max(openCost, bytesPerCore))
   }
 
   /** Hadoop conf entries, shipped to executors (Configuration itself is
@@ -584,7 +623,7 @@ class FitsPartitionReader(path: String, swo: FitsSpecWithOffset,
     val vals = new Array[Any](colIdx.length)
     var k = 0
     while (k < colIdx.length) { vals(k) = tileVals(k)(tileRowIdx); k += 1 }
-    current = InternalRow.fromSeq(vals.toIndexedSeq)
+    current = new GenericInternalRow(vals)
     tileRowIdx += 1
     true
   }
@@ -622,9 +661,7 @@ class FitsPartitionReader(path: String, swo: FitsSpecWithOffset,
       if (c.code == 'A') {
         var i = 0
         while (i < inTile) {
-          val s = new String(raw, i * c.repeat, c.repeat,
-            java.nio.charset.StandardCharsets.US_ASCII)
-          out(i) = UTF8String.fromString(FitsFormat.trimTrailing(s))
+          out(i) = FitsFormat.asciiCell(raw, i * c.repeat, c.repeat)
           i += 1
         }
       } else {
@@ -659,7 +696,7 @@ class FitsPartitionReader(path: String, swo: FitsSpecWithOffset,
       }
       k += 1
     }
-    InternalRow.fromSeq(values.toIndexedSeq)
+    new GenericInternalRow(values)
   }
 
   private def decodeBin(spec: FitsFormat.TableSpec): InternalRow = {
@@ -670,9 +707,7 @@ class FitsPartitionReader(path: String, swo: FitsSpecWithOffset,
       val c = spec.cols(ci)
       val base = spec.offsets(ci)
       values(k) = if (c.varDesc.isDefined) readVarCell(c, base) else c.code match {
-        case 'A' =>
-          val s = new String(rowBuf, base, c.repeat, java.nio.charset.StandardCharsets.US_ASCII)
-          UTF8String.fromString(FitsFormat.trimTrailing(s)) // trailing-blank trim
+        case 'A' => FitsFormat.asciiCell(rowBuf, base, c.repeat)
         case 'X' =>
           java.util.Arrays.copyOfRange(rowBuf, base, base + c.byteWidth)
         // zero-repeat numeric columns ('0E' — legal per FITS 4.0 §7.3.1)
@@ -698,7 +733,7 @@ class FitsPartitionReader(path: String, swo: FitsSpecWithOffset,
       }
       k += 1
     }
-    InternalRow.fromSeq(values.toIndexedSeq)
+    new GenericInternalRow(values)
   }
 
   /** TDIM re-nesting: FITS cells are column-major flat (first axis varies
@@ -736,10 +771,8 @@ class FitsPartitionReader(path: String, swo: FitsSpecWithOffset,
     if (nBytes > 0) src.readAt(heapStart + off, cell, 0, nBytes)
     if (c.code == 'X') return cell // packed bits as binary
     val hb = ByteBuffer.wrap(cell)
-    if (c.code == 'A') {
-      val s = new String(cell, java.nio.charset.StandardCharsets.US_ASCII)
-      UTF8String.fromString(FitsFormat.trimTrailing(s))
-    } else {
+    if (c.code == 'A') FitsFormat.asciiCell(cell, 0, cell.length)
+    else {
       val arr = new Array[Any](cnt.toInt)
       var i = 0
       while (i < cnt) {

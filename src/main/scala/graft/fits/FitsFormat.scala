@@ -3,6 +3,7 @@ package graft.fits
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** FITS 4.0 binary-table format primitives (IAU FITS standard; layout is
   * fixed by the standard, not by any implementation — SURVEY §1.1).
@@ -25,10 +26,30 @@ object FitsFormat {
     * hundreds of millions of redundant compiles on an archive scan.
     * Same accepted class as the regex (`\s` ⇔ isWhitespace for ASCII).
     */
-  @inline private[fits] def trimTrailing(s: String): String = {
+  @inline private[graft] def trimTrailing(s: String): String = {
     var end = s.length
     while (end > 0 && Character.isWhitespace(s.charAt(end - 1))) end -= 1
     if (end == s.length) s else s.substring(0, end)
+  }
+
+  /** A fixed-width 'A' cell as Spark's string, trimmed on the bytes: for
+    * bytes below 0x80 US-ASCII decoding is the identity, so trimming the
+    * bytes and wrapping a copy of them equals the String → trimTrailing →
+    * UTF-8 round trip, without the decode and re-encode. A cell holding
+    * any byte ≥ 0x80 takes that round trip, which keeps US-ASCII's
+    * replacement character. The result owns its bytes (`b` may be a
+    * reused record buffer).
+    */
+  private[graft] def asciiCell(b: Array[Byte], off: Int, len: Int): UTF8String = {
+    var i = off
+    while (i < off + len) {
+      if (b(i) < 0) return UTF8String.fromString(
+        trimTrailing(new String(b, off, len, StandardCharsets.US_ASCII)))
+      i += 1
+    }
+    var end = off + len
+    while (end > off && Character.isWhitespace(b(end - 1).toInt)) end -= 1
+    UTF8String.fromBytes(java.util.Arrays.copyOfRange(b, off, end))
   }
 
   /** One column as declared by the header.

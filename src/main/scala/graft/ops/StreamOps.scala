@@ -51,7 +51,8 @@ object StreamOps {
     * (a plain java.io.File reports 0 for hdfs://, s3:// or file: URIs,
     * which would have started a 100 TB cluster stream at width 1);
     * unknown or empty sizes fall back to the cluster's default
-    * parallelism, never to 1.
+    * parallelism, never to 1. A size that cannot be read is logged as a
+    * warning with the paths and the error before falling back.
     */
   private[graft] def withArrivalSizedShuffle[T](s: SparkSession,
       srcPaths: Seq[String])(body: => T): T = {
@@ -62,7 +63,12 @@ object StreamOps {
         val fs = path.getFileSystem(conf)
         if (fs.exists(path)) fs.getContentSummary(path).getLength else 0L
       }.sum
-    } catch { case scala.util.control.NonFatal(_) => 0L }
+    } catch { case scala.util.control.NonFatal(e) =>
+      org.apache.logging.log4j.LogManager.getLogger(getClass).warn(
+        s"cannot size the arrival of ${srcPaths.mkString(", ")}; shuffle " +
+          "partitions fall back to the default parallelism", e)
+      0L
+    }
     val dp = s.sparkContext.defaultParallelism.toLong
     val parts =
       if (bytes <= 0L) dp

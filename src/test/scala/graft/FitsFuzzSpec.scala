@@ -543,4 +543,70 @@ class FitsFuzzSpec extends SparkTestBase {
     assert(Wcs.of(cube + ("CTYPE1" -> "'RA---SIN'")
       + ("CTYPE2" -> "'DEC--SIN'") + ("CTYPE3" -> "'FREQ-LSR'")).isEmpty)
   }
+
+  test("byte-level 'A' trim equals the US-ASCII String round trip on any bytes") {
+    // whitespace-heavy, with NULs, tabs, the other isWhitespace controls
+    // and bytes >= 0x80 (which must keep US-ASCII's replacement char)
+    def byteG(high: Boolean): Gen[Byte] = Gen.frequency(
+      4 -> Gen.const(' '.toByte), 1 -> Gen.const('\t'.toByte),
+      1 -> Gen.const(0.toByte),
+      1 -> Gen.oneOf(0x0a, 0x0b, 0x0c, 0x0d, 0x1c, 0x1d, 0x1e, 0x1f).map(_.toByte),
+      4 -> Gen.choose(0x21, 0x7e).map(_.toByte),
+      (if (high) 2 else 0) -> Gen.choose(0x80, 0xff).map(_.toByte))
+    val caseG = for {
+      high <- Gen.frequency(3 -> false, 1 -> true)
+      buf <- Gen.listOf(byteG(high)).map(_.take(64).toArray)
+      off <- Gen.choose(0, buf.length)
+      len <- Gen.choose(0, buf.length - off)
+    } yield (buf, off, len)
+    check(Prop.forAll(caseG) { case (buf, off, len) =>
+      val want = org.apache.spark.unsafe.types.UTF8String.fromString(
+        FitsFormat.trimTrailing(new String(buf, off, len,
+          java.nio.charset.StandardCharsets.US_ASCII)))
+      val got = FitsFormat.asciiCell(buf, off, len)
+      val same = got == want
+      // the cell must own its bytes: the reader reuses its record buffer
+      java.util.Arrays.fill(buf, 'x'.toByte)
+      same && got == want
+    }, n = 1000)
+  }
+
+  test("a truncated data unit fails at plan time naming the file, HDU and sizes") {
+    val sch = StructType(Seq(StructField("k", LongType), StructField("s", StringType)))
+    val full = graft.Util.scratch("trunc_full.fits")
+    FitsWriter.write(full, sch, (0 until 200).map(i => Row(i.toLong, s"r$i")),
+      strLens = Map("s" -> 8))
+    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(full))
+    val swo = graft.fits.FitsTable.readSpec(full, 0)
+    val dataEnd = swo.dataStart + swo.spec.rowBytes * 200L
+    assert(bytes.length - 2880L < dataEnd, "one block short must cut into the data")
+    var i = 0
+    def cutTo(n: Long): String = {
+      i += 1
+      val p = graft.Util.scratch(s"trunc_$i.fits")
+      java.nio.file.Files.write(java.nio.file.Paths.get(p), bytes.take(n.toInt))
+      p
+    }
+    def plan(p: String) = graft.fits.FitsScan.splitsFor(Seq(p), 0,
+      swo.spec.schema, None)
+    def expectLoud(n: Long): Boolean = {
+      val p = cutTo(n)
+      val e = intercept[IllegalArgumentException](plan(p))
+      Seq(p, "extension #0", s"needs $dataEnd bytes", s"file has $n")
+        .forall(e.getMessage.contains)
+    }
+    // mid-row, and one 2880-byte block short of the padded file
+    assert(expectLoud(swo.dataStart + 37L * swo.spec.rowBytes + swo.spec.rowBytes / 2))
+    assert(expectLoud(bytes.length - 2880L))
+    check(Prop.forAll(Gen.choose(swo.dataStart, dataEnd - 1))(expectLoud), n = 30)
+    // the read fails and names the file, before any task starts
+    val cut = cutTo(dataEnd - 1)
+    val e = intercept[Exception](spark.read.format("fits").load(cut).collect())
+    def chain(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(x => x.getMessage +: chain(x.getCause))
+    assert(chain(e).exists(m => m != null && m.contains(cut)),
+      s"error does not name the file: ${chain(e).mkString(" | ")}")
+    // a file that ends at the data unit, without its block padding, is whole
+    assert(plan(cutTo(dataEnd)).length == 1)
+  }
 }

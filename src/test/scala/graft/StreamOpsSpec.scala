@@ -31,6 +31,38 @@ class StreamOpsSpec extends SparkTestBase {
     assert(b.exceptAll(a).count() == 0)
   }
 
+  test("arrival sizing that cannot read a size warns, then uses default parallelism") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Throwable)]()
+    val app = new AbstractAppender("arrival-sizing", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        seen.add(e.getMessage.getFormattedMessage -> e.getThrown)
+    }
+    app.start()
+    val name = StreamOps.getClass.getName
+    val logger = LogManager.getLogger(name).asInstanceOf[Logger]
+    val level = logger.getLevel
+    Configurator.setLevel(name, Level.WARN)
+    logger.addAppender(app)
+    val src = "nosuchscheme://bucket/drop"
+    try {
+      val parts = StreamOps.withArrivalSizedShuffle(spark, Seq(src))(
+        spark.conf.get("spark.sql.shuffle.partitions"))
+      assert(parts == spark.sparkContext.defaultParallelism.toString)
+      val warned = seen.toArray.collect { case (m: String, t: Throwable) => (m, t) }
+      assert(warned.exists { case (m, _) => m.contains(src) },
+        s"no warning naming the path with its error: ${seen.toArray.mkString("; ")}")
+    } finally {
+      logger.removeAppender(app)
+      app.stop()
+      Configurator.setLevel(name, level)
+    }
+  }
+
   test("j1 tumbling aggregation: stream equals batch") {
     val batch = StreamOps.tumblingAgg(Tables.t(spark, sfDir, "events"))
     val stream = runToTable(StreamOps.tumblingAgg(
