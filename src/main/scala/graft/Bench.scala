@@ -37,11 +37,14 @@ object Bench {
     // queries) landed in every per-query max−min — sweep-mode spread_s was
     // 38–51 on a load<1.5 box while back-to-back reps of any single query
     // agree within ~50 ms; (b) a suite-wide warm-up pass did NOT remove the
-    // first-rep codegen-compile term, because Spark's whole-stage-codegen
-    // class cache holds ~100 entries and 200 intervening queries evict it —
-    // the warm-up must run immediately before the reps it warms. The
-    // per-query MEDIAN is unchanged in expectation (every rep sees the same
-    // warm state); spread_s now measures only genuine same-state noise.
+    // first-rep compile term: Spark's generated-class cache then held its
+    // default 100 entries, and ~200 intervening queries evicted it. That
+    // reason is gone — Util.sessionBuilder sizes the cache to 512, above
+    // the working set of a whole closed loop — but the adjacent warm-up
+    // stays for what it still removes from the first rep: JIT of the
+    // query's operator paths and a cold page cache for its input files.
+    // The per-query MEDIAN is unchanged in expectation (every rep sees the
+    // same warm state); spread_s now measures only genuine same-state noise.
     // Warm-up failures stay silent — the timed loop reports them loudly.
     val samples = selected.map { case (name, fn) =>
       try fn(spark, sfDir).count()

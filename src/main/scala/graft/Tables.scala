@@ -88,7 +88,8 @@ object Tables {
 object Util {
   /** The ONE definition of the session config every main shares (master,
     * shuffle partitions sized to cores, timestamp-NTZ inference off —
-    * see SparkTestBase for why — UI off). Six hand-copies of the NTZ
+    * see SparkTestBase for why — UI off, generated-class cache sized to
+    * the operator working set). Six hand-copies of the NTZ
     * flag in one round is exactly how session-config drift happens;
     * mains chain their extras (timezone, appName) on the returned
     * builder.
@@ -108,6 +109,24 @@ object Util {
       // fixture scale, and at 100 TB stages exceed the advisory size
       // so the flag is a no-op there. PERF.md §r12 has the receipts.
       .config("spark.ui.enabled", "false")
+      // Spark's generated-class cache (static, one per JVM: the driver
+      // and every executor; default 100 entries). A long-lived session
+      // that cycles through more distinct classes than it holds
+      // recompiles each of them on every cycle: a closed query loop,
+      // stream serving, the 257-key sweep, in local and cluster mode
+      // alike. Measured on perfbench ops_mix (22 keys, 4 cores, seed 1):
+      // a whole run compiles 395 distinct classes (387 in its warm-up
+      // pass). At 100 entries each timed pass recompiled 400 and 396 of
+      // them, 5.9 and 6.6 s of logged compile time, and the run compiled
+      // 1,228; at 512 a timed pass compiles 4 (0.03 s). 512 is the
+      // smallest power of two above that working set. Its cost is memory:
+      // ops_mix peak RSS went 1769 -> 1849 MB (medians of ten runs) for
+      // the ~295 classes kept beyond 100, about 0.27 MB per class.
+      // CodeGenerator sizes the cache once, from the first session that
+      // compiles; a spark.* system property (what --conf sets) wins.
+      .config(CodegenCacheKey, sys.props.getOrElse(CodegenCacheKey, "512"))
+
+  private val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
 
   /** Parse-and-validate SPARK_GRAFT_ONLY (the shared Bench/Verify subset
     * convention): set-but-empty means unset, unknown keys fail fast —

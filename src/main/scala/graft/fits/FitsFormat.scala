@@ -86,8 +86,10 @@ object FitsFormat {
       }
     }
 
+    // The column predicates below are vals: the reader consults them for
+    // every cell, and a ColSpec is immutable.
     /** Unsigned-integer idiom: TZERO=2^(bits-1), TSCAL absent/1 (§1.2). */
-    def isUnsignedIdiom: Boolean = zero.exists { z =>
+    val isUnsignedIdiom: Boolean = zero.exists { z =>
       scale.forall(_ == 1.0) && (
         (code == 'B' && z == -128.0) || // signed-byte idiom (rare, inverse)
         (code == 'I' && z == 32768.0) ||
@@ -95,9 +97,13 @@ object FitsFormat {
         (code == 'K' && z == 9.223372036854775808e18))
     }
 
-    def hasScaling: Boolean =
+    val hasScaling: Boolean =
       (scale.exists(_ != 1.0) || zero.exists(_ != 0.0)) && !isUnsignedIdiom &&
-        !Set('L', 'A', 'X', 'C', 'M').contains(code) // scaling undefined there
+        "LAXCM".indexOf(code) < 0 // scaling undefined there
+
+    /** TNULLn unpacked: `decodeElem` tests `hasTnull && raw == tnullValue`. */
+    val hasTnull: Boolean = tnull.isDefined
+    val tnullValue: Long = tnull.getOrElse(0L)
 
     /** Spark type per the SURVEY §1.2 widening table. */
     def sparkElemType: DataType =
@@ -164,7 +170,7 @@ object FitsFormat {
       scale: Option[Double],
       zero: Option[Double],
       tnullStr: Option[String]) {
-    def hasScaling: Boolean = scale.exists(_ != 1.0) || zero.exists(_ != 0.0)
+    val hasScaling: Boolean = scale.exists(_ != 1.0) || zero.exists(_ != 0.0)
     def sparkType: DataType = code match {
       case 'A' => StringType
       case 'I' => if (hasScaling) DoubleType else LongType
@@ -975,6 +981,8 @@ object FitsFormat {
 
   // ------------------------------------------------------------ cell decode
 
+  private val TwoPow63 = java.math.BigDecimal.valueOf(2).pow(63)
+
   /** Decodes one scalar element at absolute position `pos` in `buf`,
     * returning the raw (unscaled) value as Spark-internal scalar, or null
     * (TNULL sentinel / float NaN policy).
@@ -987,24 +995,24 @@ object FitsFormat {
     }
     case 'B' =>
       val raw = (buf.get(pos) & 0xff).toShort
-      if (c.tnull.exists(_ == raw.toLong)) null
+      if (c.hasTnull && raw == c.tnullValue) null
       else if (c.isUnsignedIdiom) (raw - 128).toShort // TZERO=-128 signed-byte idiom
       else raw
     case 'I' =>
       val raw = buf.getShort(pos)
-      if (c.tnull.exists(_ == raw.toLong)) null
+      if (c.hasTnull && raw == c.tnullValue) null
       else if (c.isUnsignedIdiom) (raw.toInt + 32768) // widen unsigned
       else raw
     case 'J' =>
       val raw = buf.getInt(pos)
-      if (c.tnull.exists(_ == raw.toLong)) null
+      if (c.hasTnull && raw == c.tnullValue) null
       else if (c.isUnsignedIdiom) raw.toLong + 2147483648L
       else raw
     case 'K' =>
       val raw = buf.getLong(pos)
-      if (c.tnull.exists(_ == raw)) null
+      if (c.hasTnull && raw == c.tnullValue) null
       else if (c.isUnsignedIdiom)
-        Decimal(java.math.BigDecimal.valueOf(raw).add(java.math.BigDecimal.valueOf(2).pow(63)), 20, 0)
+        Decimal(java.math.BigDecimal.valueOf(raw).add(TwoPow63), 20, 0)
       else raw
     case 'E' =>
       val v = buf.getFloat(pos)

@@ -1452,7 +1452,14 @@ object StreamOps {
     // #2 / opt guide §6): the k×64 centroid artifact is materialized
     // (localCheckpoint — removes one parquet scan job per batch), the
     // index keeps ONE lazy scan handle (file listing resolved once; the
-    // per-batch literal cell partition filter plans exactly as before)
+    // per-batch literal cell partition filter plans exactly as before).
+    // Durability trade-off: localCheckpoint keeps its blocks on the
+    // executor that computed them and cuts the lineage, so nothing can
+    // recompute them. That holds for a bounded AvailableNow run; in a
+    // long-lived cluster serving stream, losing that executor fails every
+    // later batch. Such a deployment needs replicated storage
+    // (persist(MEMORY_AND_DISK_2)) or a driver-side broadcast of the
+    // k×64 table instead.
     val cent = s.read.parquet(graft.ops.LlmOps.sq8IvfCentDir(idx))
       .localCheckpoint()
     val idxDf = s.read.parquet(idx)

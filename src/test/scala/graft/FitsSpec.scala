@@ -346,6 +346,72 @@ class FitsSpec extends SparkTestBase {
     assert(vals == Seq(-128, 127, 0))
   }
 
+  test("TZERO/TSCAL idioms: column predicates and decoded cells, per code") {
+    import FitsFormat.ColSpec
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.types.Decimal
+    val two63 = 9.223372036854775808e18
+    def col(code: Char, scale: Option[Double] = None, zero: Option[Double] = None,
+        tnull: Option[Long] = None) = ColSpec("c", code, 1, scale, zero, tnull)
+    def buf(fill: ByteBuffer => Unit): ByteBuffer = {
+      val b = ByteBuffer.allocate(16); fill(b); b
+    }
+    // C/M decode to a row; compare its fields, and everything by class too
+    def norm(v: Any): Any = v match {
+      case r: InternalRow => (norm(r.get(0, NullType)), norm(r.get(1, NullType)))
+      case null => null
+      case x => (x, x.getClass)
+    }
+    // (case, column, cell bytes, isUnsignedIdiom, hasScaling, decoded cell)
+    val cases = Seq[(String, ColSpec, ByteBuffer, Boolean, Boolean, Any)](
+      ("B plain", col('B'), buf(_.put(0, 0xF0.toByte)), false, false, 240.toShort),
+      ("B TZERO -128", col('B', zero = Some(-128.0)), buf(_.put(0, 5.toByte)),
+        true, false, (-123).toShort),
+      ("B TNULL", col('B', tnull = Some(255L)), buf(_.put(0, 0xFF.toByte)), false, false, null),
+      ("I TZERO 32768", col('I', zero = Some(32768.0)), buf(_.putShort(0, Short.MinValue)),
+        true, false, 0),
+      ("I TZERO 32768 TSCAL 1", col('I', Some(1.0), Some(32768.0)),
+        buf(_.putShort(0, Short.MaxValue)), true, false, 65535),
+      ("I TZERO 32768 TSCAL 2", col('I', Some(2.0), Some(32768.0)),
+        buf(_.putShort(0, 7)), false, true, 7.toShort),
+      ("I TNULL", col('I', tnull = Some(-1L)), buf(_.putShort(0, -1)), false, false, null),
+      ("J TZERO 2^31", col('J', zero = Some(2147483648.0)), buf(_.putInt(0, Int.MaxValue)),
+        true, false, 4294967295L),
+      ("J TSCAL 0.5", col('J', scale = Some(0.5)), buf(_.putInt(0, -3)), false, true, -3),
+      ("J TNULL miss", col('J', tnull = Some(-99L)), buf(_.putInt(0, -98)), false, false, -98),
+      ("J TNULL hit", col('J', tnull = Some(-99L)), buf(_.putInt(0, -99)), false, false, null),
+      ("K TZERO 2^63", col('K', zero = Some(two63)), buf(_.putLong(0, Long.MaxValue)),
+        true, false, Decimal(new java.math.BigDecimal("18446744073709551615"), 20, 0)),
+      ("K TZERO 2^63 TNULL", col('K', zero = Some(two63), tnull = Some(Long.MinValue)),
+        buf(_.putLong(0, Long.MinValue)), true, false, null),
+      ("K TZERO 1", col('K', zero = Some(1.0)), buf(_.putLong(0, 41L)), false, true, 41L),
+      ("L TZERO", col('L', zero = Some(5.0)), buf(_.put(0, 'T'.toByte)), false, false, true),
+      ("C TSCAL", col('C', scale = Some(2.0)),
+        buf(b => { b.putFloat(0, 1.5f); b.putFloat(4, -2f) }), false, false,
+        InternalRow(1.5f, -2f)),
+      ("M TZERO", col('M', zero = Some(1.0)),
+        buf(b => { b.putDouble(0, 1.5); b.putDouble(8, -2.0) }), false, false,
+        InternalRow(1.5, -2.0)))
+    cases.foreach { case (name, c, b, unsigned, scaled, cell) =>
+      assert(c.isUnsignedIdiom == unsigned, name)
+      assert(c.hasScaling == scaled, name)
+      assert(norm(FitsFormat.decodeElem(b, 0, c)) == norm(cell), name)
+    }
+    // scaling is undefined on A and X as well, whatever TSCAL/TZERO say
+    Seq('A', 'X').foreach { code =>
+      val c = col(code, Some(2.0), Some(3.0))
+      assert(!c.hasScaling && !c.isUnsignedIdiom, code)
+    }
+    // the predicates follow the fields on copy (they are per-instance vals)
+    val j = col('J', zero = Some(2147483648.0), tnull = Some(7L))
+    assert(!j.copy(zero = None).isUnsignedIdiom)
+    assert(j.copy(scale = Some(3.0)).hasScaling)
+    assert(!j.copy(tnull = None).hasTnull && j.hasTnull && j.tnullValue == 7L)
+    val scaledI = col('I', Some(2.0), Some(32768.0))
+    assert(FitsFormat.applyScale(
+      FitsFormat.decodeElem(buf(_.putShort(0, 7)), 0, scaledI), scaledI) == 32782.0)
+  }
+
   test("quoted header values keep slashes and escaped quotes") {
     import java.io.{ByteArrayInputStream, DataInputStream}
     val cards = Seq(
