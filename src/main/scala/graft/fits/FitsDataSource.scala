@@ -6,16 +6,18 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+import org.apache.spark.util.SerializableConfiguration
 
 /** FITS BINTABLE DataSource V2 (SURVEY §2 a7, §4.3).
   *
@@ -34,9 +36,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - Column pruning is honored at the byte level: only requested columns
   *    are decoded (per-column fixed offsets), the rest of each record is
   *    skipped — SupportsPushDownRequiredColumns.
+  *  - Columnar reads: a BINTABLE column sits at a constant stride, so the
+  *    reader takes a block of at most 4096 rows (and 4 MiB) per
+  *    `readFully` and decodes each required column from it straight into
+  *    an on-heap column vector; tiled tables copy each tile's column-major
+  *    cells into the vectors. Spark adds ColumnarToRow above the scan
+  *    where rows are needed.
   *  - Conversion semantics (§1.2): big-endian decode, TSCAL/TZERO scaling,
   *    unsigned-idiom widening, TNULL→null, float NaN/Inf→null, trailing
   *    blank trim — i.e. the fits2db B-group applied at the source.
+  *  - Observable: the scan publishes DSv2 custom metrics (bytes read, rows
+  *    decoded, tiles decompressed, read+decode time timed per batch) into
+  *    the BatchScan node's SQL metrics; a short read, a heap or tile
+  *    descriptor out of range or a wrongly sized tile fails with the path,
+  *    the extension number and the byte offset.
   *
   * Usage: `spark.read.format("fits").option("extnum", 0).load(path)`.
   */
@@ -284,7 +297,7 @@ object FitsScan {
             (0L to n).map(i => (units / n) * i + math.min(i, units % n))
         }
       bounds.sliding(2).collect { case Seq(a, b) =>
-        FitsInputPartition(p, h.swo, a, b): InputPartition
+        FitsInputPartition(p, h.swo, a, b, extnum, h.dataBytes): InputPartition
       }.toArray
     }
   }
@@ -305,16 +318,12 @@ object FitsScan {
     math.min(conf.filesMaxPartitionBytes, math.max(openCost, bytesPerCore))
   }
 
-  /** Hadoop conf entries, shipped to executors (Configuration itself is
-    * not serializable).
+  /** The session's Hadoop conf, broadcast once for every task of a scan
+    * (a `Configuration` is not serializable), as Spark's file sources do.
     */
-  def confProps(): Map[String, String] = {
-    val c = FitsTable.driverHadoopConf()
-    val it = c.iterator()
-    val b = Map.newBuilder[String, String]
-    while (it.hasNext) { val e = it.next(); b += (e.getKey -> e.getValue) }
-    b.result()
-  }
+  private[fits] def broadcastHadoopConf(): Broadcast[SerializableConfiguration] =
+    org.apache.spark.sql.SparkSession.active.sparkContext.broadcast(
+      new SerializableConfiguration(new Configuration(FitsTable.driverHadoopConf())))
 }
 
 class FitsScan(patterns: Seq[String], snapshot: Seq[String], extnum: Int,
@@ -330,6 +339,9 @@ class FitsScan(patterns: Seq[String], snapshot: Seq[String], extnum: Int,
       rowsPerSplitOpt, checkpointLocation)
   override def description(): String =
     s"FitsScan(${patterns.mkString(",")}, cols=${required.fieldNames.mkString(",")})"
+  override def columnarSupportMode(): Scan.ColumnarSupportMode =
+    Scan.ColumnarSupportMode.SUPPORTED
+  override def supportedCustomMetrics(): Array[CustomMetric] = FitsMetrics.supported
 
   override def planInputPartitions(): Array[InputPartition] = {
     // plan over the table's FROZEN snapshot — no re-listing per execution
@@ -339,12 +351,14 @@ class FitsScan(patterns: Seq[String], snapshot: Seq[String], extnum: Int,
     // the reader opens it even for an empty row range
     if (splits.isEmpty)
       Array(FitsInputPartition(snapshot.headOption.getOrElse(
-        FitsTable.firstMatching(patterns)), swo, 0, 0))
+        FitsTable.firstMatching(patterns)), swo, 0, 0, extnum, 0))
     else splits
   }
 
+  // one broadcast per scan, reused if the plan runs again
+  private lazy val hadoopConf = FitsScan.broadcastHadoopConf()
   override def createReaderFactory(): PartitionReaderFactory =
-    new FitsReaderFactory(required, FitsScan.confProps())
+    new FitsReaderFactory(required, hadoopConf)
 }
 
 /** Micro-batch FITS stream — the nightly-drop ingest shape: files land in
@@ -447,60 +461,109 @@ class FitsMicroBatchStream(patterns: Seq[String], extnum: Int,
     FitsScan.splitsFor(files, extnum, firstSchema, rowsPerSplitOpt)
   }
 
+  private lazy val hadoopConf = FitsScan.broadcastHadoopConf()
   override def createReaderFactory(): PartitionReaderFactory =
-    new FitsReaderFactory(required, FitsScan.confProps())
+    new FitsReaderFactory(required, hadoopConf)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
 }
 
+/** One split: rows [rowStart, rowEnd) of table extension `extnum` (TILE
+  * indices for a tiled table), plus the file's data unit size, which
+  * bounds every heap descriptor the reader follows.
+  */
 final case class FitsInputPartition(path: String, swo: FitsSpecWithOffset,
-    rowStart: Long, rowEnd: Long) extends InputPartition
+    rowStart: Long, rowEnd: Long, extnum: Int, dataBytes: Long) extends InputPartition
 
-class FitsReaderFactory(required: StructType, confProps: Map[String, String])
-  extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[FitsInputPartition]
-    new FitsPartitionReader(p.path, p.swo, required, p, confProps)
+class FitsReaderFactory(required: StructType,
+    hadoopConf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("the FITS source reads columnar batches only")
+  override def createColumnarReader(partition: InputPartition): PartitionReader[ColumnarBatch] =
+    new FitsPartitionReader(partition.asInstanceOf[FitsInputPartition], required,
+      hadoopConf.value.value)
+}
+
+/** The FITS scan's DSv2 custom metrics, summed over tasks. */
+object FitsMetrics {
+  val BytesRead = "bytesRead"
+  val RowsDecoded = "rowsDecoded"
+  val TilesDecompressed = "tilesDecompressed"
+  val DecodeTime = "decodeTime"
+
+  def supported: Array[CustomMetric] = Array(new FitsBytesReadMetric,
+    new FitsRowsDecodedMetric, new FitsTilesDecompressedMetric, new FitsDecodeTimeMetric)
+
+  private[fits] def task(n: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
+    override def name(): String = n
+    override def value(): Long = v
   }
 }
 
-class FitsPartitionReader(path: String, swo: FitsSpecWithOffset,
-    required: StructType, part: FitsInputPartition,
-    confProps: Map[String, String] = Map.empty)
-  extends PartitionReader[InternalRow] {
+// Spark instantiates these by class name on the driver: top level, no-arg.
+abstract class FitsSumMetric(n: String, d: String) extends CustomSumMetric {
+  override def name(): String = n
+  override def description(): String = d
+}
+class FitsBytesReadMetric extends FitsSumMetric(FitsMetrics.BytesRead, "FITS bytes read")
+class FitsRowsDecodedMetric extends FitsSumMetric(FitsMetrics.RowsDecoded, "FITS rows decoded")
+class FitsTilesDecompressedMetric
+  extends FitsSumMetric(FitsMetrics.TilesDecompressed, "FITS tiles decompressed")
+/** Task values are nanoseconds, timed per batch; shown as milliseconds. */
+class FitsDecodeTimeMetric extends CustomMetric {
+  override def name(): String = FitsMetrics.DecodeTime
+  override def description(): String = "FITS read and decode time (ms)"
+  override def aggregateTaskMetrics(taskMetrics: Array[Long]): String =
+    (taskMetrics.sum / 1000000L).toString
+}
 
+object FitsPartitionReader {
+  /** Rows per batch, and the cap on one plain block's bytes: a block is
+    * read with one `readFully` and decoded column by column.
+    */
+  val BatchRows = 4096
+  val BlockBytes: Int = 4 << 20
+}
+
+/** Reads one split into a reused `ColumnarBatch` of on-heap vectors.
+  *
+  * A plain BINTABLE or ASCII TABLE split is read a block of rows at a time
+  * (at most `BatchRows` rows and `BlockBytes` bytes, one `readFully` each);
+  * each required column is then decoded from the block at its constant
+  * stride straight into its vector. A tiled table decompresses each tile's
+  * required cells, which are already column-major, and copies them into
+  * the vectors across tile boundaries. Heap (P/Q) cells and tile cells
+  * are positioned reads bounded by the data unit: a descriptor outside
+  * it, a short read or a cell that does not decompress to its size fails
+  * with the path, the extension and the byte offset.
+  */
+class FitsPartitionReader(part: FitsInputPartition, required: StructType,
+    hadoopConf: Configuration) extends PartitionReader[ColumnarBatch] {
+  import FitsFormat.ColSpec
+  import FitsPartitionReader._
+
+  private val path = part.path
+  private val swo = part.swo
   private val spec = swo.spec
-  // Binary vs ASCII table flavor; exactly one is defined.
-  private val binSpec: Option[FitsFormat.TableSpec] = spec match {
-    case b: FitsFormat.TableSpec => Some(b); case _ => None
+  private val rowBytes = spec.rowBytes
+  private val colNames: Seq[String] = spec match {
+    case b: FitsFormat.TableSpec => b.cols.map(_.name)
+    case t: FitsFormat.TiledTableSpec => t.cols.map(_.name)
+    case a: FitsFormat.AsciiTableSpec => a.cols.map(_.name)
   }
-  private val asciiSpec: Option[FitsFormat.AsciiTableSpec] = spec match {
-    case a: FitsFormat.AsciiTableSpec => Some(a); case _ => None
-  }
-  // Tiled (ZTABLE=T) flavor: part.rowStart/rowEnd are TILE indices, and
-  // each stored record expands to tileLen logical rows (see splitsFor).
-  private val tiledSpec: Option[FitsFormat.TiledTableSpec] = spec match {
-    case t: FitsFormat.TiledTableSpec => Some(t); case _ => None
-  }
-  private val colNames: Seq[String] = binSpec.map(_.cols.map(_.name))
-    .orElse(tiledSpec.map(_.cols.map(_.name)))
-    .getOrElse(asciiSpec.get.cols.map(_.name))
   // Indices (into the full column list) of the requested columns, in
   // requested order — only these are decoded.
   private val colIdx: Array[Int] =
     required.fieldNames.map(n => colNames.indexWhere(_ == n))
 
   private val p = new Path(path)
-  private val fs = {
-    val c = new Configuration()
-    confProps.foreach { case (k, v) => c.set(k, v) }
-    p.getFileSystem(c)
-  }
+  private val fs = p.getFileSystem(hadoopConf)
 
   /** Row bytes come sequentially; heap (P/Q) cells by positioned read. */
   private trait ByteSrc {
-    def readFully(b: Array[Byte]): Unit
+    def readFully(b: Array[Byte], off: Int, len: Int): Unit
     def readAt(pos: Long, b: Array[Byte], off: Int, len: Int): Unit
     def close(): Unit
   }
@@ -510,9 +573,9 @@ class FitsPartitionReader(path: String, swo: FitsSpecWithOffset,
     */
   private final class FileSrc extends ByteSrc {
     private val in = fs.open(p)
-    in.seek(swo.dataStart + part.rowStart * spec.rowBytes)
+    in.seek(swo.dataStart + part.rowStart * rowBytes)
     private var heapInOpt: Option[org.apache.hadoop.fs.FSDataInputStream] = None
-    def readFully(b: Array[Byte]): Unit = in.readFully(b)
+    def readFully(b: Array[Byte], off: Int, len: Int): Unit = in.readFully(b, off, len)
     def readAt(pos: Long, b: Array[Byte], off: Int, len: Int): Unit = {
       val h = heapInOpt.getOrElse {
         val x = fs.open(p); heapInOpt = Some(x); x
@@ -545,7 +608,7 @@ class FitsPartitionReader(path: String, swo: FitsSpecWithOffset,
     private def seq: java.io.DataInputStream = seqOpt.getOrElse {
       val d = new java.io.DataInputStream(
         new java.util.zip.GZIPInputStream(fs.open(p)))
-      d.skipNBytes(swo.dataStart + part.rowStart * spec.rowBytes)
+      d.skipNBytes(swo.dataStart + part.rowStart * rowBytes)
       seqOpt = Some(d)
       d
     }
@@ -574,7 +637,7 @@ class FitsPartitionReader(path: String, swo: FitsSpecWithOffset,
         out.toByteArray
       } finally s.close()
     }
-    def readFully(b: Array[Byte]): Unit = seq.readFully(b)
+    def readFully(b: Array[Byte], off: Int, len: Int): Unit = seq.readFully(b, off, len)
     def readAt(at: Long, b: Array[Byte], off: Int, len: Int): Unit = {
       if (heapBytes == null) heapBytes = materialize()
       if (at + len > heapBytes.length)
@@ -587,203 +650,396 @@ class FitsPartitionReader(path: String, swo: FitsSpecWithOffset,
 
   private val src: ByteSrc =
     if (FitsTable.isGzip(path)) new GzipSrc else new FileSrc
-  private lazy val heapStart = swo.dataStart +
-    binSpec.map(_.theap).orElse(tiledSpec.map(_.theap)).get
+  private val theap: Long = spec match {
+    case b: FitsFormat.TableSpec => b.theap
+    case t: FitsFormat.TiledTableSpec => t.theap
+    case _ => 0L
+  }
+  private val heapStart = swo.dataStart + theap
+  private val heapSize = part.dataBytes - theap
 
-  private val rowBuf = new Array[Byte](spec.rowBytes)
-  private val buf = ByteBuffer.wrap(rowBuf) // big-endian per FITS
-  private var row = part.rowStart
-  private var current: InternalRow = _
+  // rows this split yields, which bounds the batch for small splits
+  private val batchRows: Int = {
+    val (rows, cap) = spec match {
+      case ts: FitsFormat.TiledTableSpec =>
+        (math.min(part.rowEnd * ts.tileLen, ts.zRows) - part.rowStart * ts.tileLen,
+          BatchRows)
+      case _ =>
+        (part.rowEnd - part.rowStart,
+          math.min(BatchRows, BlockBytes / math.max(1, rowBytes)))
+    }
+    math.max(1L, math.min(cap.toLong, rows)).toInt
+  }
+  // a plain block of batchRows records, or one tiled table's stored record
+  private val block = new Array[Byte](spec match {
+    case _: FitsFormat.TiledTableSpec => rowBytes
+    case _ => batchRows * rowBytes
+  })
+  private val blockBuf = ByteBuffer.wrap(block) // big-endian per FITS
+  private val vectors = OnHeapColumnVector.allocateColumns(batchRows, required)
+  private val batch = new ColumnarBatch(vectors.map(v => v: ColumnVector))
+  private var row = part.rowStart // next record to read: a row, or a tile
 
-  override def next(): Boolean = tiledSpec match {
-    case Some(ts) => nextTiled(ts)
-    case None =>
-      if (row >= part.rowEnd) return false
-      src.readFully(rowBuf)
-      current = decode()
-      row += 1
-      true
+  private var bytesRead = 0L
+  private var rowsDecoded = 0L
+  private var tilesDecompressed = 0L
+  private var decodeNanos = 0L
+
+  override def next(): Boolean = {
+    val t0 = System.nanoTime()
+    vectors.foreach(_.reset())
+    val n = spec match {
+      case ts: FitsFormat.TiledTableSpec => fillTiled(ts)
+      case _ => fillBlock()
+    }
+    batch.setNumRows(n)
+    rowsDecoded += n
+    decodeNanos += System.nanoTime() - t0
+    n > 0
   }
 
-  // ------------------------------------------------------------- tiled path
+  override def get(): ColumnarBatch = batch
 
-  private var tileRowIdx = 0
-  private var tileRowCount = 0
-  /** Decoded values of the CURRENT tile, one array per required column —
+  override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
+    FitsMetrics.task(FitsMetrics.BytesRead, bytesRead),
+    FitsMetrics.task(FitsMetrics.RowsDecoded, rowsDecoded),
+    FitsMetrics.task(FitsMetrics.TilesDecompressed, tilesDecompressed),
+    FitsMetrics.task(FitsMetrics.DecodeTime, decodeNanos))
+
+  override def close(): Unit = try src.close() finally batch.close()
+
+  /** A data-unit error naming the file, the extension and the offset. */
+  private def corrupt(what: String, offset: Long, cause: Throwable = null) =
+    new java.io.IOException(s"FITS file '$path', table extension #${part.extnum}: " +
+      s"$what at byte offset $offset", cause)
+
+  /** A read whose stream ends early, or whose gzip data is corrupt,
+    * fails as `corrupt`.
+    */
+  private def reading(what: => String, at: Long)(read: => Unit): Unit =
+    try read
+    catch { case e @ (_: java.io.EOFException | _: java.util.zip.ZipException) =>
+      throw corrupt(what, at, e)
+    }
+
+  /** `len` record bytes into `block`, from the sequential stream. */
+  private def readBlock(len: Int): Unit = {
+    reading(s"short read of $len record bytes (file truncated?)",
+      swo.dataStart + row * rowBytes)(src.readFully(block, 0, len))
+    bytesRead += len
+  }
+
+  /** `len` heap bytes at heap offset `off`, after checking that a
+    * descriptor read from `descAt` stays inside the heap.
+    */
+  private def readHeap(off: Long, len: Long, descAt: Long, what: String): Array[Byte] = {
+    if (len < 0 || off < 0 || len > Int.MaxValue - 8 || off + len > heapSize)
+      throw corrupt(s"$what: descriptor out of range ($len bytes at heap offset $off, " +
+        s"heap of $heapSize bytes)", descAt)
+    val cell = new Array[Byte](len.toInt)
+    if (len > 0) {
+      reading(s"$what: short heap read of $len bytes", heapStart + off)(
+        src.readAt(heapStart + off, cell, 0, len.toInt))
+      bytesRead += len
+    }
+    cell
+  }
+
+  // --------------------------------------------------------- plain blocks
+
+  private def fillBlock(): Int = {
+    val n = math.min(batchRows.toLong, part.rowEnd - row).toInt
+    if (n <= 0) return 0
+    readBlock(n * rowBytes)
+    spec match {
+      case b: FitsFormat.TableSpec =>
+        var k = 0
+        while (k < colIdx.length) {
+          val ci = colIdx(k)
+          val c = b.cols(ci)
+          if (c.varDesc.isDefined) putVarCells(c, vectors(k), b.offsets(ci), n)
+          else putCells(c, vectors(k), 0, blockBuf, b.offsets(ci), rowBytes, n)
+          k += 1
+        }
+      case a: FitsFormat.AsciiTableSpec => putAsciiRows(a, n)
+      case other => throw new IllegalStateException(s"not a plain table: $other")
+    }
+    row += n
+    n
+  }
+
+  /** ASCII TABLE records: fixed character fields, parsed per TFORM/TBCOL. */
+  private def putAsciiRows(a: FitsFormat.AsciiTableSpec, n: Int): Unit =
+    if (colIdx.nonEmpty) {
+      var j = 0
+      while (j < n) {
+        val rowChars = new String(block, j * rowBytes, rowBytes,
+          java.nio.charset.StandardCharsets.US_ASCII)
+        var k = 0
+        while (k < colIdx.length) {
+          val v = vectors(k)
+          FitsFormat.decodeAsciiField(rowChars, a.cols(colIdx(k))) match {
+            case null => v.putNull(j)
+            case s: String => v.putByteArray(j, s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+            case l: Long => v.putLong(j, l)
+            case d: Double => v.putDouble(j, d)
+          }
+          k += 1
+        }
+        j += 1
+      }
+    }
+
+  /** Variable-length cells: a (count, offset) descriptor in each record,
+    * the data in the heap (FITS 4.0 §7.3.5).
+    */
+  private def putVarCells(c: ColSpec, v: WritableColumnVector, colOff: Int, n: Int): Unit = {
+    var elems = 0 // next free slot of the array column's element vector
+    var j = 0
+    while (j < n) {
+      val at = j * rowBytes + colOff
+      val (cnt, off) = c.varDesc.get match {
+        case 'P' => (blockBuf.getInt(at).toLong, blockBuf.getInt(at + 4).toLong)
+        case _ => (blockBuf.getLong(at), blockBuf.getLong(at + 8))
+      }
+      val len =
+        if (cnt < 0 || cnt > Int.MaxValue) -1L
+        else if (c.code == 'X') (cnt + 7) / 8 // var-length bit array: cnt BITS
+        else cnt * c.elemBytes
+      val cell = readHeap(off, len, swo.dataStart + (row + j) * rowBytes + colOff,
+        s"variable-length cell of $cnt elements in ${c.name}")
+      c.code match {
+        case 'X' => v.putByteArray(j, cell) // packed bits as binary
+        case 'A' => putAscii(v, j, cell, 0, cell.length)
+        case _ =>
+          val count = cnt.toInt
+          val leaf = v.arrayData()
+          leaf.reserve(elems + count)
+          putElems(c, leaf, elems, ByteBuffer.wrap(cell), 0, c.elemBytes, count)
+          v.putArray(j, elems, count)
+          elems += count
+      }
+      j += 1
+    }
+  }
+
+  // ---------------------------------------------------------- tiled path
+
+  private var tileRows = 0 // logical rows of the loaded tile
+  private var tilePos = 0  // its next row to copy out
+  /** Decompressed cells of the loaded tile, one per required column —
     * column pruning means unrequested columns are never decompressed.
     */
-  private var tileVals: Array[Array[Any]] = _
+  private val tileCells = new Array[ByteBuffer](colIdx.length)
 
-  private def nextTiled(ts: FitsFormat.TiledTableSpec): Boolean = {
-    while (tileVals == null || tileRowIdx >= tileRowCount) {
-      if (row >= part.rowEnd) return false // row = tile cursor here
-      loadTile(ts, row)
-      row += 1
+  private def fillTiled(ts: FitsFormat.TiledTableSpec): Int = {
+    var filled = 0
+    while (filled < batchRows) {
+      if (tilePos >= tileRows) {
+        if (row >= part.rowEnd) return filled
+        loadTile(ts)
+        row += 1
+      } else {
+        val m = math.min(batchRows - filled, tileRows - tilePos)
+        var k = 0
+        while (k < colIdx.length) {
+          val c = ts.cols(colIdx(k))
+          // zero-repeat ('0E') column: the cell stores no data; the value
+          // is NULL per row
+          if (c.repeat == 0) vectors(k).putNulls(filled, m)
+          else {
+            val stride = c.repeat * c.elemBytes
+            putCells(c, vectors(k), filled, tileCells(k), tilePos * stride, stride, m)
+          }
+          k += 1
+        }
+        filled += m
+        tilePos += m
+      }
     }
-    val vals = new Array[Any](colIdx.length)
-    var k = 0
-    while (k < colIdx.length) { vals(k) = tileVals(k)(tileRowIdx); k += 1 }
-    current = new GenericInternalRow(vals)
-    tileRowIdx += 1
-    true
+    filled
   }
 
-  private def loadTile(ts: FitsFormat.TiledTableSpec, tile: Long): Unit = {
-    src.readFully(rowBuf) // this tile's stored record: one 1PB per column
-    val inTile = ts.rowsInTile(tile)
-    tileRowCount = inTile
-    tileRowIdx = 0
-    tileVals = new Array[Array[Any]](colIdx.length)
+  /** Reads tile `row`'s stored record (one 1PB descriptor per column) and
+    * decompresses its required cells.
+    */
+  private def loadTile(ts: FitsFormat.TiledTableSpec): Unit = {
+    val recordAt = swo.dataStart + row * rowBytes
+    readBlock(rowBytes)
+    tileRows = ts.rowsInTile(row)
+    tilePos = 0
+    if (colIdx.nonEmpty) tilesDecompressed += 1
     var k = 0
     while (k < colIdx.length) {
       val ci = colIdx(k)
       val c = ts.cols(ci)
-      val nbytes = buf.getInt(ci * 8)
-      val off = buf.getInt(ci * 8 + 4)
-      require(nbytes >= 0 && off >= 0,
-        s"tiled cell descriptor out of range in ${c.name}: ($nbytes, $off)")
-      val out = new Array[Any](inTile)
-      if (c.repeat == 0) {
-        // zero-repeat ('0E') column: the cell stores no data; the value is
-        // NULL per row — same rule as decodeBin's repeat==0 branch, which
-        // would otherwise diverge between plain and tiled bintables. Skip
-        // the codec too: there is nothing to decompress.
-        tileVals(k) = out
-        k += 1
-      } else {
-      val blob = new Array[Byte](nbytes)
-      if (nbytes > 0) src.readAt(heapStart + off, blob, 0, nbytes)
-      val raw = TileCodec.decodeCell(ts.zctyp(ci), blob,
-        inTile * c.repeat, c.elemBytes)
-      require(raw.length == inTile * c.repeat * c.elemBytes,
-        s"tile $tile column ${c.name}: decompressed to ${raw.length} bytes, " +
-          s"expected ${inTile * c.repeat * c.elemBytes}")
-      if (c.code == 'A') {
-        var i = 0
-        while (i < inTile) {
-          out(i) = FitsFormat.asciiCell(raw, i * c.repeat, c.repeat)
+      if (c.repeat > 0) { // a zero-repeat cell has nothing to decompress
+        val off = blockBuf.getInt(ci * 8 + 4).toLong
+        val what = s"tile $row column ${c.name}"
+        val blob = readHeap(off, blockBuf.getInt(ci * 8).toLong, recordAt + ci * 8, what)
+        val expected = tileRows * c.repeat * c.elemBytes
+        val raw =
+          try TileCodec.decodeCell(ts.zctyp(ci), blob, tileRows * c.repeat, c.elemBytes)
+          catch { case scala.util.control.NonFatal(e) =>
+            throw corrupt(s"$what: ${ts.zctyp(ci)} cell of ${blob.length} bytes does " +
+              s"not decode", heapStart + off, e)
+          }
+        if (raw.length != expected)
+          throw corrupt(s"$what: ${ts.zctyp(ci)} cell decompressed to ${raw.length} " +
+            s"bytes, expected $expected", heapStart + off)
+        tileCells(k) = ByteBuffer.wrap(raw)
+      }
+      k += 1
+    }
+  }
+
+  // ------------------------------------------------------------ decoders
+
+  /** `n` fixed-width cells of `c` into rows `dst…` of `v`; cell i starts
+    * at `src[base + i·stride]` (a record block, or a tile's column-major
+    * cell).
+    */
+  private def putCells(c: ColSpec, v: WritableColumnVector, dst: Int,
+      src: ByteBuffer, base: Int, stride: Int, n: Int): Unit = {
+    var i = 0
+    c.code match {
+      case 'A' =>
+        while (i < n) { putAscii(v, dst + i, src.array, base + i * stride, c.repeat); i += 1 }
+      case 'X' =>
+        while (i < n) { v.putByteArray(dst + i, src.array, base + i * stride, c.byteWidth); i += 1 }
+      // zero-repeat numeric columns ('0E' — legal per FITS 4.0 §7.3.1)
+      // occupy no record bytes: reading at the shared offset would return
+      // the NEXT column's bytes reinterpreted — the cell has no data, so
+      // the value is NULL
+      case _ if c.repeat == 0 => v.putNulls(dst, n)
+      case _ if c.repeat > 1 =>
+        // TDIM (d1,…,dn) nests n array levels with dn outermost; FITS
+        // cells are column-major flat (first axis fastest), so the leaf
+        // elements are the cell's elements in file order
+        val shape = c.tdim match {
+          case Some(dims) if dims.length >= 2 => dims.reverse
+          case _ => Seq(c.repeat)
+        }
+        var level = v
+        var start = dst
+        var count = n
+        shape.foreach { d =>
+          var g = 0
+          while (g < count) { level.putArray(start + g, (start + g) * d, d); g += 1 }
+          start *= d
+          count *= d
+          level = level.arrayData()
+          level.reserve(start + count)
+        }
+        while (i < n) {
+          putElems(c, level, (dst + i) * c.repeat, src, base + i * stride, c.elemBytes, c.repeat)
           i += 1
         }
-      } else {
-        val bb = ByteBuffer.wrap(raw)
-        var i = 0
-        while (i < inTile) {
-          val v = FitsFormat.decodeElem(bb, i * c.elemBytes, c)
-          out(i) = if (c.hasScaling) FitsFormat.applyScale(v, c) else v
-          i += 1
+      case _ => putElems(c, v, dst, src, base, stride, n)
+    }
+  }
+
+  /** An 'A' cell, trailing blanks trimmed (`FitsFormat.asciiCell`). */
+  private def putAscii(v: WritableColumnVector, r: Int, b: Array[Byte],
+      off: Int, len: Int): Unit = {
+    val end = FitsFormat.asciiEnd(b, off, len)
+    if (end >= 0) v.putByteArray(r, b, off, end - off)
+    else v.putByteArray(r, FitsFormat.asciiCell(b, off, len).getBytes)
+  }
+
+  /** `n` scalar elements of `c` into rows `dst…` of `v`, element i at
+    * `src[base + i·stride]`: the `FitsFormat.decodeElem` + `applyScale`
+    * rules (TNULL → NULL, unsigned idioms, TSCAL/TZERO, NaN/Inf → NULL)
+    * as one typed loop per element type.
+    */
+  private def putElems(c: ColSpec, v: WritableColumnVector, dst: Int,
+      src: ByteBuffer, base: Int, stride: Int, n: Int): Unit = {
+    val scaled = c.hasScaling
+    val s = c.scale.getOrElse(1.0)
+    val z = c.zero.getOrElse(0.0)
+    val tnull = c.hasTnull
+    val tv = c.tnullValue
+    val unsigned = c.isUnsignedIdiom
+    var i = 0
+    var pos = base
+    c.code match {
+      case 'L' => // FITS 4.0: 'T', 'F', 0x00 = undefined
+        while (i < n) {
+          src.get(pos) match {
+            case 0x54 => v.putBoolean(dst + i, true)
+            case 0x46 => v.putBoolean(dst + i, false)
+            case _ => v.putNull(dst + i)
+          }
+          i += 1; pos += stride
         }
-      }
-      tileVals(k) = out
-      k += 1
-      }
-    }
-  }
-
-  private def decode(): InternalRow = binSpec match {
-    case Some(b) => decodeBin(b)
-    case None => decodeAscii(asciiSpec.get)
-  }
-
-  /** ASCII TABLE record: fixed character fields, parsed per TFORM/TBCOL. */
-  private def decodeAscii(a: FitsFormat.AsciiTableSpec): InternalRow = {
-    val rowChars = new String(rowBuf, java.nio.charset.StandardCharsets.US_ASCII)
-    val values = new Array[Any](colIdx.length)
-    var k = 0
-    while (k < colIdx.length) {
-      values(k) = FitsFormat.decodeAsciiField(rowChars, a.cols(colIdx(k))) match {
-        case s: String => UTF8String.fromString(s)
-        case v => v
-      }
-      k += 1
-    }
-    new GenericInternalRow(values)
-  }
-
-  private def decodeBin(spec: FitsFormat.TableSpec): InternalRow = {
-    val values = new Array[Any](colIdx.length)
-    var k = 0
-    while (k < colIdx.length) {
-      val ci = colIdx(k)
-      val c = spec.cols(ci)
-      val base = spec.offsets(ci)
-      values(k) = if (c.varDesc.isDefined) readVarCell(c, base) else c.code match {
-        case 'A' => FitsFormat.asciiCell(rowBuf, base, c.repeat)
-        case 'X' =>
-          java.util.Arrays.copyOfRange(rowBuf, base, base + c.byteWidth)
-        // zero-repeat numeric columns ('0E' — legal per FITS 4.0 §7.3.1)
-        // occupy no record bytes: the scalar branch below would read the
-        // NEXT column's bytes at the shared offset and return them
-        // reinterpreted — the cell has no data, so the value is NULL
-        case _ if c.repeat == 0 => null
-        case _ if c.repeat > 1 =>
-          val arr = new Array[Any](c.repeat)
-          var i = 0
-          while (i < c.repeat) {
-            val raw = FitsFormat.decodeElem(buf, base + i * c.elemBytes, c)
-            arr(i) = if (c.hasScaling) FitsFormat.applyScale(raw, c) else raw
-            i += 1
+      case 'B' =>
+        while (i < n) {
+          val raw = src.get(pos) & 0xff
+          if (tnull && raw == tv) v.putNull(dst + i)
+          else if (scaled) v.putDouble(dst + i, raw * s + z)
+          else if (unsigned) v.putShort(dst + i, (raw - 128).toShort) // TZERO=-128
+          else v.putShort(dst + i, raw.toShort)
+          i += 1; pos += stride
+        }
+      case 'I' =>
+        while (i < n) {
+          val raw = src.getShort(pos)
+          if (tnull && raw == tv) v.putNull(dst + i)
+          else if (scaled) v.putDouble(dst + i, raw * s + z)
+          else if (unsigned) v.putInt(dst + i, raw + 32768)
+          else v.putShort(dst + i, raw)
+          i += 1; pos += stride
+        }
+      case 'J' =>
+        while (i < n) {
+          val raw = src.getInt(pos)
+          if (tnull && raw == tv) v.putNull(dst + i)
+          else if (scaled) v.putDouble(dst + i, raw * s + z)
+          else if (unsigned) v.putLong(dst + i, raw + 2147483648L)
+          else v.putInt(dst + i, raw)
+          i += 1; pos += stride
+        }
+      case 'K' =>
+        while (i < n) {
+          val raw = src.getLong(pos)
+          if (tnull && raw == tv) v.putNull(dst + i)
+          else if (scaled) v.putDouble(dst + i, raw * s + z)
+          else if (unsigned) v.putDecimal(dst + i, FitsFormat.unsignedK(raw), 20)
+          else v.putLong(dst + i, raw)
+          i += 1; pos += stride
+        }
+      case 'E' => // fits2db float policy (§1.2): NaN/Inf → NULL
+        while (i < n) {
+          val f = src.getFloat(pos)
+          if (f.isNaN || f.isInfinite) v.putNull(dst + i)
+          else if (scaled) v.putDouble(dst + i, f * s + z)
+          else v.putFloat(dst + i, f)
+          i += 1; pos += stride
+        }
+      case 'D' =>
+        while (i < n) {
+          val d = src.getDouble(pos)
+          if (d.isNaN || d.isInfinite) v.putNull(dst + i)
+          else if (scaled) v.putDouble(dst + i, d * s + z)
+          else v.putDouble(dst + i, d)
+          i += 1; pos += stride
+        }
+      case 'C' | 'M' => // (re, im) struct; a struct vector's fields grow apart
+        val re = v.getChild(0)
+        val im = v.getChild(1)
+        re.reserve(dst + n)
+        im.reserve(dst + n)
+        while (i < n) {
+          if (c.code == 'C') {
+            re.putFloat(dst + i, src.getFloat(pos))
+            im.putFloat(dst + i, src.getFloat(pos + 4))
+          } else {
+            re.putDouble(dst + i, src.getDouble(pos))
+            im.putDouble(dst + i, src.getDouble(pos + 8))
           }
-          c.tdim match {
-            case Some(dims) if dims.length >= 2 => nest(arr, dims)
-            case _ => new GenericArrayData(arr)
-          }
-        case _ =>
-          val raw = FitsFormat.decodeElem(buf, base, c)
-          if (c.hasScaling) FitsFormat.applyScale(raw, c) else raw
-      }
-      k += 1
-    }
-    new GenericInternalRow(values)
-  }
-
-  /** TDIM re-nesting: FITS cells are column-major flat (first axis varies
-    * fastest), so dims (d1,…,dn) become n nested arrays with dn outermost.
-    */
-  private def nest(flat: Array[Any], dims: Seq[Int]): GenericArrayData =
-    if (dims.length == 1) new GenericArrayData(flat)
-    else {
-      val outerN = dims.last
-      val chunk = flat.length / outerN
-      new GenericArrayData((0 until outerN).map(o =>
-        nest(flat.slice(o * chunk, (o + 1) * chunk), dims.init): Any).toArray)
-    }
-
-  /** Variable-length cell: (count, offset) descriptor in the record, data
-    * in the heap (FITS 4.0 §7.3.5).
-    */
-  private def readVarCell(c: FitsFormat.ColSpec, base: Int): Any = {
-    val (cnt, off) = c.varDesc.get match {
-      case 'P' => (buf.getInt(base).toLong, buf.getInt(base + 4).toLong)
-      case _ => (buf.getLong(base), buf.getLong(base + 8))
-    }
-    val nBytesL =
-      if (c.code == 'X') (cnt + 7) / 8 // var-length bit array: cnt BITS
-      else cnt * c.elemBytes
-    // off >= 0 matches the tiled reader's descriptor guard: a corrupt or
-    // truncated file with a negative heap offset would otherwise
-    // positioned-read header/record bytes as cell data — silently wrong
-    // values instead of a loud descriptor error
-    require(cnt >= 0 && off >= 0 && nBytesL <= Int.MaxValue - 8,
-      s"variable-length cell descriptor out of range in ${c.name}: " +
-        s"($cnt elements, offset $off, ${nBytesL}B)")
-    val nBytes = nBytesL.toInt
-    val cell = new Array[Byte](nBytes)
-    if (nBytes > 0) src.readAt(heapStart + off, cell, 0, nBytes)
-    if (c.code == 'X') return cell // packed bits as binary
-    val hb = ByteBuffer.wrap(cell)
-    if (c.code == 'A') FitsFormat.asciiCell(cell, 0, cell.length)
-    else {
-      val arr = new Array[Any](cnt.toInt)
-      var i = 0
-      while (i < cnt) {
-        val raw = FitsFormat.decodeElem(hb, i * c.elemBytes, c)
-        arr(i) = if (c.hasScaling) FitsFormat.applyScale(raw, c) else raw
-        i += 1
-      }
-      new GenericArrayData(arr)
+          i += 1; pos += stride
+        }
+      case other => throw new IllegalStateException(s"no element decoder for '$other'")
     }
   }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = src.close()
 }

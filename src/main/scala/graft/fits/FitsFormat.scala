@@ -41,15 +41,26 @@ object FitsFormat {
     * reused record buffer).
     */
   private[graft] def asciiCell(b: Array[Byte], off: Int, len: Int): UTF8String = {
+    val end = asciiEnd(b, off, len)
+    if (end < 0) UTF8String.fromString(
+      trimTrailing(new String(b, off, len, StandardCharsets.US_ASCII)))
+    else UTF8String.fromBytes(java.util.Arrays.copyOfRange(b, off, end))
+  }
+
+  /** End of the trailing-whitespace-trimmed cell `b[off, off + len)`, or
+    * -1 when the cell holds a byte ≥ 0x80 (which needs `asciiCell`'s
+    * String round trip). The columnar reader copies `[off, end)` straight
+    * into a string vector.
+    */
+  private[graft] def asciiEnd(b: Array[Byte], off: Int, len: Int): Int = {
     var i = off
     while (i < off + len) {
-      if (b(i) < 0) return UTF8String.fromString(
-        trimTrailing(new String(b, off, len, StandardCharsets.US_ASCII)))
+      if (b(i) < 0) return -1
       i += 1
     }
     var end = off + len
     while (end > off && Character.isWhitespace(b(end - 1).toInt)) end -= 1
-    UTF8String.fromBytes(java.util.Arrays.copyOfRange(b, off, end))
+    end
   }
 
   /** One column as declared by the header.
@@ -125,6 +136,7 @@ object FitsFormat {
     def sparkType: DataType =
       if (varDesc.isDefined) code match {
         case 'A' => StringType // var-length char array = one string
+        case 'X' => BinaryType // var-length bit array = its packed bytes
         case _ => ArrayType(sparkElemType, containsNull = true)
       }
       else code match {
@@ -406,7 +418,7 @@ object FitsFormat {
         s"ZFORM$i=${req(s"ZFORM$i")}: only scalar numeric or wA logical " +
           "columns are supported in tiled tables")
       // repeat == 0 ('0E') is legal and decodes as an all-NULL column,
-      // matching decodeBin's zero-repeat rule for plain bintables
+      // matching the zero-repeat rule for plain bintables
       val rawName = cards.getOrElse(s"TTYPE$i", s"col$i")
       var name = rawName
       var k = 2
@@ -983,6 +995,12 @@ object FitsFormat {
 
   private val TwoPow63 = java.math.BigDecimal.valueOf(2).pow(63)
 
+  /** A K cell under the unsigned idiom (TZERO = 2^63): raw + 2^63 as
+    * DECIMAL(20, 0), the type `sparkElemType` declares for it.
+    */
+  private[fits] def unsignedK(raw: Long): Decimal =
+    Decimal(java.math.BigDecimal.valueOf(raw).add(TwoPow63), 20, 0)
+
   /** Decodes one scalar element at absolute position `pos` in `buf`,
     * returning the raw (unscaled) value as Spark-internal scalar, or null
     * (TNULL sentinel / float NaN policy).
@@ -1011,8 +1029,7 @@ object FitsFormat {
     case 'K' =>
       val raw = buf.getLong(pos)
       if (c.hasTnull && raw == c.tnullValue) null
-      else if (c.isUnsignedIdiom)
-        Decimal(java.math.BigDecimal.valueOf(raw).add(TwoPow63), 20, 0)
+      else if (c.isUnsignedIdiom) unsignedK(raw)
       else raw
     case 'E' =>
       val v = buf.getFloat(pos)

@@ -609,4 +609,113 @@ class FitsFuzzSpec extends SparkTestBase {
     // a file that ends at the data unit, without its block padding, is whole
     assert(plan(cutTo(dataEnd)).length == 1)
   }
+
+  /** Reads every planned split through the reader the scan uses. */
+  private def readSplits(parts: Seq[graft.fits.FitsInputPartition],
+      schema: StructType): Long = {
+    val conf = spark.sparkContext.broadcast(new org.apache.spark.util.SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration))
+    parts.map { p =>
+      val r = new graft.fits.FitsReaderFactory(schema, conf).createColumnarReader(p)
+      var rows = 0L
+      try while (r.next()) rows += r.get().numRows finally r.close()
+      rows
+    }.sum
+  }
+
+  /** A data-unit error names the file, the extension and a byte offset. */
+  private def isLoud(e: Throwable, path: String): Boolean =
+    e.isInstanceOf[java.io.IOException] && !e.isInstanceOf[java.io.EOFException] &&
+      Seq(s"'$path'", "table extension #0", "at byte offset").forall(e.getMessage.contains)
+
+  test("a data unit truncated after planning fails in the reader with the file, HDU and offset") {
+    val sch = StructType(Seq(StructField("k", LongType), StructField("s", StringType)))
+    val full = graft.Util.scratch("late_trunc_full.fits")
+    val n = 9000
+    FitsWriter.write(full, sch, (0 until n).map(i => Row(i.toLong, s"r$i")),
+      strLens = Map("s" -> 8))
+    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(full))
+    val swo = graft.fits.FitsTable.readSpec(full, 0)
+    val dataEnd = (swo.dataStart + swo.spec.rowBytes.toLong * n).toInt
+    val gzBytes = {
+      val bos = new java.io.ByteArrayOutputStream()
+      val gz = new java.util.zip.GZIPOutputStream(bos)
+      gz.write(bytes); gz.close()
+      bos.toByteArray
+    }
+    var i = 0
+    def lateCut(src: Array[Byte], cut: Int, ext: String): Boolean = {
+      i += 1
+      val p = graft.Util.scratch(s"late_trunc_$i$ext")
+      java.nio.file.Files.write(java.nio.file.Paths.get(p), src)
+      // plan on the whole file, then cut it before any task reads
+      val parts = graft.fits.FitsScan.splitsFor(Seq(p), 0, sch, Some(2000L))
+        .map(_.asInstanceOf[graft.fits.FitsInputPartition]).toSeq
+      java.nio.file.Files.write(java.nio.file.Paths.get(p), src.take(cut))
+      val e = intercept[Throwable](readSplits(parts, sch))
+      isLoud(e, p) && e.getCause.isInstanceOf[java.io.IOException]
+    }
+    assert(lateCut(bytes, dataEnd - 1, ".fits"))
+    check(Prop.forAll(Gen.choose(swo.dataStart.toInt, dataEnd - 1))(
+      cut => lateCut(bytes, cut, ".fits")), n = 20)
+    // a short gzip member: the compressed stream ends early
+    check(Prop.forAll(Gen.choose(gzBytes.length / 4, gzBytes.length * 3 / 4))(
+      cut => lateCut(gzBytes, cut, ".fits.gz")), n = 10)
+    // the untouched file reads every row through the same path
+    val whole = graft.fits.FitsScan.splitsFor(Seq(full), 0, sch, Some(2000L))
+      .map(_.asInstanceOf[graft.fits.FitsInputPartition]).toSeq
+    assert(readSplits(whole, sch) == n)
+  }
+
+  test("bit flips in tile descriptors fail loudly or read every row, never a bare error") {
+    import spark.implicits._
+    val n = 3300
+    val tileLen = 500 // 7 tiles, the last one of 300 rows
+    val src = graft.Util.scratch("desc_flip_src.fits")
+    FitsWriter.writeTiledDataFrame(src, spark.range(n).map(i => (i, i * 0.5, s"v$i"))
+      .toDF("k", "d", "s").coalesce(1), tileLen = tileLen, strLens = Map("s" -> 6))
+    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(src))
+    val swo = graft.fits.FitsTable.readSpec(src, 0)
+    val ts = swo.spec.asInstanceOf[FitsFormat.TiledTableSpec]
+    val sch = ts.schema
+    val descBytes = (ts.nTiles * ts.storedRowBytes).toInt
+    var i = 0
+    def variant(mutate: Array[Byte] => Unit): (String, Seq[graft.fits.FitsInputPartition]) = {
+      i += 1
+      val p = graft.Util.scratch(s"desc_flip_$i.fits")
+      val b = bytes.clone()
+      mutate(b)
+      java.nio.file.Files.write(java.nio.file.Paths.get(p), b)
+      // descriptors are data, not header: the plan is the same either way
+      (p, graft.fits.FitsScan.splitsFor(Seq(p), 0, sch, Some(1000L))
+        .map(_.asInstanceOf[graft.fits.FitsInputPartition]).toSeq)
+    }
+    var loud = 0
+    check(Prop.forAll(Gen.choose(0, descBytes * 8 - 1)) { bit =>
+      val (p, parts) = variant { b =>
+        val at = swo.dataStart.toInt + bit / 8
+        b(at) = (b(at) ^ (1 << (bit % 8))).toByte
+      }
+      try readSplits(parts, sch) == n
+      catch { case e: Throwable => loud += 1; isLoud(e, p) }
+    }, n = 60)
+    assert(loud > 0, "no flip was detected")
+    // the sign bit of a length, and of an offset: out of the heap
+    Seq(0, 4).foreach { field =>
+      val (p, parts) = variant(b => b(swo.dataStart.toInt + 8 + field) =
+        (b(swo.dataStart.toInt + 8 + field) | 0x80).toByte)
+      val e = intercept[java.io.IOException](readSplits(parts, sch))
+      assert(isLoud(e, p) && e.getMessage.contains("descriptor out of range"), e.getMessage)
+    }
+    // the last (partial) tile's d cell pointed at tile 0's full cell: the
+    // GZIP_2 codec decompresses to the wrong size
+    val (p, parts) = variant { b =>
+      val d0 = swo.dataStart.toInt + 8 // column 2 of tile 0
+      val dLast = swo.dataStart.toInt + (ts.nTiles.toInt - 1) * ts.storedRowBytes + 8
+      System.arraycopy(b, d0, b, dLast, 8)
+    }
+    assert(ts.rowsInTile(ts.nTiles - 1) == 300)
+    val e = intercept[java.io.IOException](readSplits(parts, sch))
+    assert(isLoud(e, p) && e.getMessage.contains("decompressed to"), e.getMessage)
+  }
 }

@@ -163,7 +163,7 @@ class TiledFitsSpec extends SparkTestBase {
   }
 
   test("zero-repeat ('0E') column in a tiled table decodes as NULL") {
-    // decodeBin yields NULL for a legal repeat==0 column (FITS 4.0
+    // a plain table yields NULL for a legal repeat==0 column (FITS 4.0
     // §7.3.1); the tiled path must agree instead of feeding a zero-length
     // decoded buffer to decodeElem. Hand-crafted: one tile, two logical
     // rows, col1 ZFORM '0E' (no heap bytes), col2 'J' NOCOMPRESS.
