@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions.{col, xxhash64}
   * executes) and flags keys whose join/window/generate/aggregate count
   * DROPS under the count. The committed result lives in `Flagged`
   * (PlanAuditSpec re-runs the audit and fails on ANY drift, so the list
-  * cannot silently rot), the honest timings live in the ladder's
-  * `forced` family (`LadderMain forced` — every flagged key wrapped so
-  * all output columns are referenced), and PERF.md carries the table.
+  * cannot silently rot), an honest timing counts `force(df)` (every
+  * output column referenced, as perfbench's ops_mix digest does), and
+  * PERF.md carries the table.
   *
   * Streaming (j*) keys are exempt by construction: their work happens
   * inside the micro-batch harness when the frame is BUILT, so a count
@@ -74,8 +74,7 @@ object PlanAudit {
     * value-range tautology Catalyst does not prove, so it neither
     * constant-folds away (the first attempt used `hash IS NOT NULL`,
     * which null-intolerance folds to TRUE and the prune returns) nor
-    * drops rows. The ladder's `forced` family and `_forced` rows use
-    * this.
+    * drops rows.
     */
   def force(df: DataFrame): DataFrame =
     df.where(org.apache.spark.sql.functions.pmod(
@@ -100,72 +99,72 @@ object PlanAudit {
     "i55_curriculum_order", "i57_sft_pack", "m5_image_dedup",
     // m15 (r14): m5's window-group shape over the dual-codec hashes —
     // the same value-independent window a bare count prunes; its
-    // _forced ladder row times the real group pass
+    // forced count times the real group pass
     "m15_jpeg_dedup",
     // b18 (r8): the profile Aggregate feeds explode(array(<4 structs>)),
     // whose cardinality is value-independent — a bare count prunes the
-    // aggregates entirely; the _forced ladder row times the real profile
+    // aggregates entirely; the forced count times the real profile
     "b18_table_profile",
     // b19 (r9): b18's shape with the sketch pass — same value-independent
     // explode, so a bare count drops one of the two aggregates; the
-    // _forced row times the real sketch+anchor profile
+    // forced count times the real sketch+anchor profile
     "b19_profile_sketch",
     // i65 (r10): recall@10 is a count over the EXACT top-10 left-joined
     // to the pruned set — under a bare .count() Catalyst collapses the
     // per-query windows and the pruned-side joins (the group count is
-    // |queries|×10 regardless of hit values); the _forced row times the
+    // |queries|×10 regardless of hit values); the forced count times the
     // full certification: both rankings + the hit join
     "i65_ann_recall",
     // i66 (r10): the i65 class ×3 rungs — the union of three 1-row
     // aggregates counts to 3 regardless of hit values, so EVERY join
-    // and window prunes; the _forced row times the full sweep
+    // and window prunes; the forced count times the full sweep
     "i66_ann_nprobe_sweep",
     // i67 (r11): i66's class, two indexes per rung — the union of three
     // 1-row aggregates counts to 3 regardless of recall values, so the
     // six pruned chains and the truth join all prune under a bare
-    // count; the _forced row times the full dual certification
+    // count; the forced count times the full dual certification
     "i67_ann_ivf_kmeans",
     // i68 (r11): the per-cell refresh profile counts to |cells|
     // regardless of n_base/n_new values — the left join to the new
     // assignment (unique per cid) and the count aggregates all prune
-    // under a bare count (audit: joins 2->0, aggs 4->1); the _forced
+    // under a bare count (audit: joins 2->0, aggs 4->1); the forced
     // row times the real refresh assignment
     "i68_ann_index_refresh",
     // i70 (r11): the i65 class against the PQ index — the per-query
     // count is |queries|×10 regardless of hit values, so the ADC probe
     // joins, both rank windows and the hit join prune under a bare
-    // count (audit: joins 6->1, aggs 3->1, windows 3->1); the _forced
+    // count (audit: joins 6->1, aggs 3->1, windows 3->1); the forced
     // row times the full certification
     "i70_ann_pq_recall",
     // i72 (r11): i70's class with BOTH PQ chains (flat + cell-pruned)
     // left-joined to one truth — the per-query count is |queries|
     // regardless of hit values, so both probe chains prune under a
-    // bare count; the _forced row times the dual certification
+    // bare count; the forced count times the dual certification
     "i72_ann_ivfpq_recall",
     // i76 (r12): i72's class with the residual chain — per-query count
     // is |queries| regardless of hit values, so both probe chains prune
     // under a bare count (audit: joins 13->0, aggs 6->1, windows 4->0,
-    // generates 5->0); the _forced row times the dual certification
+    // generates 5->0); the forced count times the dual certification
     "i76_ann_rivfpq_recall",
     // i77 (r12): the profile counts to |cells| regardless of n_live, so
     // the inner pre/post join prunes one side under a bare count
-    // (audit: joins 2->1); the _forced row times the full measured
+    // (audit: joins 2->1); the forced count times the full measured
     // lifecycle profile
     "i77_ann_compaction",
     // i78 (r12): output is one row per arriving vector regardless of
     // the encoded code VALUES, so the per-vector code aggregation
-    // prunes under a bare count (audit: aggs 3->2); the _forced row
+    // prunes under a bare count (audit: aggs 3->2); the forced count
     // times the full assign+residualize+encode chain
     "i78_ann_rivfpq_refresh",
     // i81 (r13): i76's class with the OPQ chain — per-query count is
     // |queries| regardless of hit values, so both residual probe
     // chains prune under a bare count (audit: joins 16->0, aggs 7->1,
-    // windows 4->0, generates 6->0); the _forced row times the dual
+    // windows 4->0, generates 6->0); the forced count times the dual
     // certification
     "i81_ann_opq_recall",
     // i82 (r13): the i67 class — per-query count is |queries|
     // regardless of hit values, so both pruned chains prune under a
-    // bare count (audit: joins 8->0, windows 4->0); the _forced row
+    // bare count (audit: joins 8->0, windows 4->0); the forced count
     // times the dual re-cluster certification
     "i82_ann_recluster")
 }

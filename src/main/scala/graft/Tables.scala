@@ -22,10 +22,6 @@ object OpQuery {
   * scan via Catalyst pushdown — verified via explain() in BenchReport.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   // DataFrame HANDLES (logical plans, not data) are cached per
   // (session, dir, table): each spark.read.parquet pays a driver-side file
   // listing + footer read, which across ~90 bench queries × 2-6 tables adds
@@ -144,7 +140,7 @@ object Util {
     only
   }
 
-  /** Median of a non-empty sample (shared Bench/LadderMain timing math). */
+  /** Median of a non-empty sample (shared Bench/perfbench timing math). */
   def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2

@@ -4987,6 +4987,32 @@ object LlmOps {
       |WHERE s.source = 'src0'
       |ORDER BY bench_id""".stripMargin)
 
+  /** Runs independent section builds concurrently, their Spark jobs under
+    * one run-unique tag, and returns their results in order. The first
+    * failure is rethrown at once, after cancelling the tag's jobs until
+    * every section has stopped (one cancel misses a section between jobs).
+    */
+  private[graft] def concurrentSections[A](s: SparkSession,
+      sections: Seq[() => A]): Seq[A] = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
+    val tag = s"graft_sections_${java.util.UUID.randomUUID()}"
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(sections.size)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    val running = sections.map(body => Future {
+      s.sparkContext.addJobTag(tag)
+      try body() finally s.sparkContext.removeJobTag(tag)
+    })
+    try Await.result(Future.sequence(running), Duration.Inf) // fails fast
+    catch { case scala.util.control.NonFatal(e) =>
+      while (!running.forall(_.isCompleted)) {
+        s.sparkContext.cancelJobsWithTag(tag)
+        Thread.sleep(50)
+      }
+      throw e
+    } finally pool.shutdown()
+  }
+
   /** i59: the CORPUS CARD — the publishable artifact a data team ships
     * with a training set, as ONE gated operator: a tall
     * (section, metric, value) report composing five proven lineages
@@ -5024,24 +5050,17 @@ object LlmOps {
           metric.cast(StringType).as("metric"), value.cast(LongType).as("value"))
       // The four eager section builds (three localCheckpoints + the
       // edge-kernel/component chain) are INDEPENDENT lineages — running
-      // them from a small thread pool lets each job's tail back-fill the
-      // others' idle executors instead of serializing four job chains
-      // (opt guide §2.6 overlap-independent-jobs; r14 verdict #8).
-      // Spark's scheduler handles concurrent actions on one session;
-      // FIFO keeps the back-fill behaviour. Results are the SAME frames
-      // as the serial form — only submission order changed.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      val (lang, hist, tok, contam) = try {
-        val langF = Future {
-          docs.groupBy("lang")
-            .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
-            .localCheckpoint()
-        }
-        val histF = Future {
+      // them concurrently lets each job's tail back-fill the others' idle
+      // executors instead of serializing four job chains (opt guide §2.6
+      // overlap-independent-jobs; r14 verdict #8). Spark's scheduler
+      // handles concurrent actions on one session; FIFO keeps the
+      // back-fill behaviour. Results are the SAME frames as the serial
+      // form — only submission order changed.
+      val Seq(lang, hist, tok, contam) = concurrentSections(s, Seq(
+        () => docs.groupBy("lang")
+          .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
+          .localCheckpoint(),
+        () => {
           val edges = minhashVerifiedPairs(s, d).select(col("a_id"), col("b_id"))
           val comp = docs.select(col("doc_id"))
             .join(connectedComponents(s, edges)
@@ -5049,15 +5068,13 @@ object LlmOps {
             .select(coalesce(col("lbl"), col("doc_id")).as("canonical"))
           comp.groupBy("canonical").agg(count(lit(1)).as("comp_size"))
             .groupBy("comp_size").agg(count(lit(1)).as("n_components"))
-        }
-        val tokF = Future {
-          docs.where(col("text").isNotNull)
-            .select(size(split(col("text"), " ")).cast(LongType).as("n_tok"))
-            .withColumn("bucket", least(expr("n_tok DIV 16"), lit(31L)))
-            .groupBy("bucket")
-            .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
-            .localCheckpoint()
-        }
+        },
+        () => docs.where(col("text").isNotNull)
+          .select(size(split(col("text"), " ")).cast(LongType).as("n_tok"))
+          .withColumn("bucket", least(expr("n_tok DIV 16"), lit(31L)))
+          .groupBy("bucket")
+          .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
+          .localCheckpoint(),
         // the CAPPED containment engine (i45's scale path), not i52's
         // uncapped report: the card is the artifact a 100 TB run ships, and
         // the uncapped inverted index is the one section whose pair mass is
@@ -5065,19 +5082,14 @@ object LlmOps {
         // 8× rung uncapped vs ~2 s capped; the cap bounds every shingle's
         // bench postings at DecontamCap, so flag mass is linear in arriving
         // shingle instances — i45's linearity argument, now the card's too)
-        val contamF = Future {
-          containmentFlags(docs.filter(col("source") =!= "src0"),
-            docs.filter(col("source") === "src0"), 0.8,
-            broadcastBench = false, cap = Some(DecontamCap))
-            .agg(count(lit(1)).as("flagged_pairs"),
-              countDistinct(col("bench_id")).as("bench_contaminated"))
-            .crossJoin(docs.filter(col("source") === "src0")
-              .agg(count(lit(1)).as("bench_docs")))
-            .localCheckpoint()
-        }
-        (Await.result(langF, Duration.Inf), Await.result(histF, Duration.Inf),
-          Await.result(tokF, Duration.Inf), Await.result(contamF, Duration.Inf))
-      } finally pool.shutdown()
+        () => containmentFlags(docs.filter(col("source") =!= "src0"),
+          docs.filter(col("source") === "src0"), 0.8,
+          broadcastBench = false, cap = Some(DecontamCap))
+          .agg(count(lit(1)).as("flagged_pairs"),
+            countDistinct(col("bench_id")).as("bench_contaminated"))
+          .crossJoin(docs.filter(col("source") === "src0")
+            .agg(count(lit(1)).as("bench_docs")))
+          .localCheckpoint()))
       val dom = CorpusOps.withHost(docs).groupBy("host")
         .agg(count(lit(1)).as("n_docs"))
       sec("lang_docs", lang, col("lang"), col("n_docs"))

@@ -1034,13 +1034,12 @@ object MultimodalOps {
     * noise. Read 0.3% as this fixture's truth density, not the hash's
     * collision rate.
     */
-  /** The m9 hash frame (doc_id, hh), checkpointed — split out so the
-    * scale ladder can probe the blocked join's candidate volume on
-    * exactly the gate's frame. localCheckpoint (the b17 multi-consumer
-    * convention): the frame feeds BOTH self-join sides, and without the
-    * barrier each side re-runs the PNG encode+decode of the whole
-    * corpus — the expensive stage of this op (measured ~2× on the
-    * sf0.1 bench). 24 bytes/doc materialize; pixels never do.
+  /** The m9 hash frame (doc_id, hh), checkpointed. localCheckpoint (the
+    * b17 multi-consumer convention): the frame feeds BOTH self-join
+    * sides, and without the barrier each side re-runs the PNG
+    * encode+decode of the whole corpus — the expensive stage of this op
+    * (measured ~2× on the sf0.1 bench). 24 bytes/doc materialize;
+    * pixels never do.
     */
   /** Hash an arbitrary (doc_id) frame through the real synth→PNG
     * decode→hash path — the m9 codec pass over any id subset (j19 runs
@@ -1199,10 +1198,9 @@ object MultimodalOps {
     * so a decode defect, an energy defect, a blocking recall defect, or
     * cap drift all hash-mismatch.
     */
-  /** The m10 fingerprint frame (doc_id, fp), checkpointed — the m9
-    * split, for the same ladder-probe reason. The barrier keeps the WAV
-    * encode+decode of the corpus from running twice (both self-join
-    * sides); 40 bytes/doc materialize.
+  /** The m10 fingerprint frame (doc_id, fp), checkpointed. The barrier
+    * keeps the WAV encode+decode of the corpus from running twice (both
+    * self-join sides); 40 bytes/doc materialize.
     */
   private[graft] def m10FpFrame(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -1306,10 +1304,10 @@ object MultimodalOps {
   }
 
   /** The m11 keyframe-hash frame (doc_id, hh) — one row per DISTINCT
-    * per-clip keyframe hash, checkpointed (the m9/m10 split, for the
-    * same ladder-probe and single-codec-pass reasons). The per-doc
-    * `.distinct` is LOCAL (≤ 4 frames in one iterator) — no shuffle
-    * buys set semantics; ~96 bytes/doc materialize, pixels never do.
+    * per-clip keyframe hash, checkpointed (the m9/m10 single-codec-pass
+    * reason). The per-doc `.distinct` is LOCAL (≤ 4 frames in one
+    * iterator) — no shuffle buys set semantics; ~96 bytes/doc
+    * materialize, pixels never do.
     */
   private[graft] def m11FrameHashes(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -1364,11 +1362,8 @@ object MultimodalOps {
 
   /** The m11 candidate stage — FrameCap'd posting lists self-joined on
     * the frame hash, one row per shared-capped-frame instance (a < b,
-    * pre-aggregation). Shared by the op (which groups to per-pair
-    * counts) and the media ladder's candidate-mass probe, so the
-    * published candidate receipts can never diverge from what the
-    * engine actually joins (the m9/m10 `hammingBlockedCandidates`
-    * convention).
+    * pre-aggregation); the op groups it to per-pair counts (the m9/m10
+    * `hammingBlockedCandidates` convention).
     */
   private[graft] def m11CappedCandidates(fh: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window

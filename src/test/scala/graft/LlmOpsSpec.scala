@@ -1153,6 +1153,39 @@ class LlmOpsSpec extends SparkTestBase {
       "card cardinality diverges from its sources")
   }
 
+  test("i59 sections: the first failure is rethrown at once and cancels its siblings' jobs") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val sc = spark.sparkContext
+    def activeJobs = sc.statusTracker.getActiveJobIds.toSeq
+    val boom = new IllegalStateException("section failed")
+    val t0 = System.nanoTime()
+    val thrown = intercept[IllegalStateException] {
+      LlmOps.concurrentSections(spark, Seq(
+        // a job that runs for two minutes unless it is killed
+        () => sc.parallelize(0 until 2, 2).mapPartitions { it =>
+          val ctx = org.apache.spark.TaskContext.get()
+          val end = System.nanoTime() + 120L * 1000000000L
+          while (!ctx.isInterrupted() && System.nanoTime() < end) Thread.sleep(20)
+          it
+        }.count(),
+        // fails once its sibling's job is running
+        () => {
+          eventually(timeout(60.seconds), interval(20.millis)) {
+            assert(activeJobs.nonEmpty)
+          }
+          throw boom
+        }))
+    }
+    assert(thrown eq boom)
+    assert((System.nanoTime() - t0) / 1e9 < 60,
+      "the op waited for the slow section before rethrowing")
+    // the status tracker is fed by the listener bus, so it may lag a moment
+    eventually(timeout(10.seconds), interval(50.millis)) {
+      assert(activeJobs.isEmpty, s"jobs left running: $activeJobs")
+    }
+  }
+
   test("i65 recall certification: pruned hits are a subset of exact, and brute force self-certifies at 1.0") {
     import org.apache.spark.sql.functions._
     val out = LlmOps.i65_ann_recall.fn(spark, sfDir).collect()

@@ -4,7 +4,7 @@ package graft
   * committed `Flagged` set must equal what the audit derives at HEAD, in
   * BOTH directions — a newly-prunable key must be added (its bench row
   * just stopped timing the operator), and a key that stopped being
-  * prunable must be removed (its `_forced` ladder row is now redundant).
+  * prunable must be removed (its forced count is now redundant).
   *
   * Streaming (j*) keys are exempt: their work executes inside the
   * micro-batch harness when the frame is built, so a count over the
@@ -25,7 +25,7 @@ class PlanAuditSpec extends SparkTestBase {
     val stale = PlanAudit.Flagged -- derived.keySet
     assert(extra.isEmpty,
       s"keys newly pruned under .count() — add to PlanAudit.Flagged and " +
-        s"give them forced ladder rows: ${extra.toSeq.sorted.map(k =>
+        s"time them through PlanAudit.force: ${extra.toSeq.sorted.map(k =>
           s"$k (${derived(k)})").mkString("; ")}")
     assert(stale.isEmpty,
       s"keys no longer pruned — remove from PlanAudit.Flagged: " +
