@@ -569,7 +569,9 @@ class FitsPartitionReader(part: FitsInputPartition, required: StructType,
   }
 
   /** Plain file: seekable stream + a second lazily-opened handle for heap
-    * reads, so fixed-width-only scans pay nothing for it.
+    * reads, so fixed-width-only scans pay nothing for it. Heap reads are
+    * `seek` + `readFully` on that handle: a positioned `readFully(pos, …)`
+    * on the local checksummed filesystem opens a new stream per call.
     */
   private final class FileSrc extends ByteSrc {
     private val in = fs.open(p)
@@ -580,7 +582,8 @@ class FitsPartitionReader(part: FitsInputPartition, required: StructType,
       val h = heapInOpt.getOrElse {
         val x = fs.open(p); heapInOpt = Some(x); x
       }
-      h.readFully(pos, b, off, len)
+      h.seek(pos)
+      h.readFully(b, off, len)
     }
     def close(): Unit = {
       in.close()
@@ -708,19 +711,8 @@ class FitsPartitionReader(part: FitsInputPartition, required: StructType,
 
   override def close(): Unit = try src.close() finally batch.close()
 
-  /** A data-unit error naming the file, the extension and the offset. */
-  private def corrupt(what: String, offset: Long, cause: Throwable = null) =
-    new java.io.IOException(s"FITS file '$path', table extension #${part.extnum}: " +
-      s"$what at byte offset $offset", cause)
-
-  /** A read whose stream ends early, or whose gzip data is corrupt,
-    * fails as `corrupt`.
-    */
-  private def reading(what: => String, at: Long)(read: => Unit): Unit =
-    try read
-    catch { case e @ (_: java.io.EOFException | _: java.util.zip.ZipException) =>
-      throw corrupt(what, at, e)
-    }
+  private val unit = FitsFormat.DataUnit(path, s"table extension #${part.extnum}")
+  import unit.{corrupt, reading}
 
   /** `len` record bytes into `block`, from the sequential stream. */
   private def readBlock(len: Int): Unit = {

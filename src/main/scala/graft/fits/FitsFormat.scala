@@ -473,18 +473,6 @@ object FitsFormat {
 
   // ------------------------------------------------------------ image HDUs
 
-  /** A 2-d or 3-d IMAGE HDU (primary array or XTENSION='IMAGE'): the
-    * astronomy-native raster — BITPIX fixes the element type (8/16/32/64
-    * big-endian ints, -32/-64 IEEE floats; 8 is UNSIGNED per FITS 4.0),
-    * BSCALE/BZERO the linear physical scaling (the TSCAL/TZERO of
-    * images), BLANK the integer missing-pixel sentinel (floats use NaN,
-    * FITS 4.0 §5.3). NAXIS3 > 1 is the spectral-cube shape archives ship
-    * (plane z = one frequency/velocity slice); `depth` = 1 for plain
-    * frames. Row y of plane z occupies bytes
-    * [dataOffset + (z·height + y)·rowBytes, …) — rows stay independently
-    * addressable across planes, which is what makes a single huge cube
-    * scan in parallel (the table reader's row-range-split argument).
-    */
   /** Linear WCS (the CRPIXn/CRVALn/CDELTn cards — the axis mapping every
     * archive header carries; rotation/projection terms are out of scope
     * for this engine's cutout service): world = CRVAL + (p − CRPIX)·CDELT
@@ -696,11 +684,40 @@ object FitsFormat {
     }
   }
 
+  /** What every image HDU declares, plain or tile-compressed: the
+    * element type (BITPIX, or ZBITPIX of a compressed image), the
+    * geometry, the linear scaling, the integer missing-pixel sentinel and
+    * the WCS cards.
+    */
+  sealed trait ImageHdu {
+    def bitpix: Int
+    def width: Long
+    def height: Long
+    def depth: Long
+    def bscale: Double
+    def bzero: Double
+    def blank: Option[Long]
+    def wcs: Option[Wcs]
+    def wcsCd: Option[CdTanWcs]
+    def bytesPerPx: Int = math.abs(bitpix) / 8
+  }
+
+  /** A 2-d or 3-d IMAGE HDU (primary array or XTENSION='IMAGE'): the
+    * astronomy-native raster — BITPIX fixes the element type (8/16/32/64
+    * big-endian ints, -32/-64 IEEE floats; 8 is UNSIGNED per FITS 4.0),
+    * BSCALE/BZERO the linear physical scaling (the TSCAL/TZERO of
+    * images), BLANK the integer missing-pixel sentinel (floats use NaN,
+    * FITS 4.0 §5.3). NAXIS3 > 1 is the spectral-cube shape archives ship
+    * (plane z = one frequency/velocity slice); `depth` = 1 for plain
+    * frames. Row y of plane z occupies bytes
+    * [dataOffset + (z·height + y)·rowBytes, …) — rows stay independently
+    * addressable across planes, which is what makes a single huge cube
+    * scan in parallel (the table reader's row-range-split argument).
+    */
   final case class ImageSpec(bitpix: Int, width: Long, height: Long,
       bscale: Double, bzero: Double, blank: Option[Long], dataOffset: Long,
       depth: Long = 1L, wcs: Option[Wcs] = None,
-      wcsCd: Option[CdTanWcs] = None) {
-    def bytesPerPx: Int = math.abs(bitpix) / 8
+      wcsCd: Option[CdTanWcs] = None) extends ImageHdu {
     def rowBytes: Long = width * bytesPerPx
     /** Byte offset of (plane z, row y) — the one addressing rule. */
     def rowOffset(z: Long, y: Long): Long = dataOffset + (z * height + y) * rowBytes
@@ -720,48 +737,17 @@ object FitsFormat {
   }
 
   /** Locates the n-th 2-d/3-d IMAGE HDU (the primary array counts as
-    * image 0 when it carries data; header-only primaries are skipped) —
-    * the image counterpart of `locateTable`, sharing its HDU walk.
+    * image 0 when it carries data; header-only primaries are skipped).
     */
   def locateImage(in: java.io.DataInput, imgnum: Int): ImageSpec = {
-    var offset = 0L
-    var imagesSeen = 0
-    var hduIndex = 0 // only for the primary-HDU-counts-as-image-0 rule
-    // no HDU cap — the locateTable argument: ≥ one block consumed per
-    // iteration, EOF (converted below) bounds the walk
-    while (true) {
-      // end of file during a header read = walked past the last HDU:
-      // report the missing image, not a bare EOF. (The cause is attached
-      // and the message covers both readings: FITS files end cleanly at
-      // block boundaries, so EOF here usually means "fewer HDUs than
-      // requested", but a file truncated mid-header lands here too.)
-      val (cards, headerBytes) =
-        try readHeader(in)
-        catch { case e: java.io.EOFException =>
-          throw new IllegalArgumentException(
-            s"No 2-d/3-d image HDU #$imgnum found ($imagesSeen image HDUs " +
-              "in file) — or the file is truncated mid-HDU", e)
-        }
-      offset += headerBytes
-      val dataBytes = dataUnitBytes(cards)
-      val padded = ((dataBytes + BlockSize - 1) / BlockSize) * BlockSize
-      val naxis = cards.getOrElse("NAXIS", "0").toInt
-      val isImage = (naxis == 2 || naxis == 3) &&
-        (hduIndex == 0 || cards.get("XTENSION").exists(_.trim == "IMAGE"))
-      if (isImage) {
-        if (imagesSeen == imgnum) return imageSpec(cards, offset)
-        imagesSeen += 1
-      }
-      var toSkip = padded
-      while (toSkip > 0) {
-        val n = in.skipBytes(math.min(toSkip, Int.MaxValue.toLong).toInt)
-        if (n <= 0) throw new java.io.EOFException("Unexpected EOF skipping FITS data")
-        toSkip -= n
-      }
-      offset += padded
-      hduIndex += 1
+    val (cards, offset) = locateNth(in, imgnum,
+      seen => s"No 2-d/3-d image HDU #$imgnum found ($seen image HDUs in file)") {
+      (cards, hduIndex) =>
+        val naxis = cards.getOrElse("NAXIS", "0").toInt
+        (naxis == 2 || naxis == 3) &&
+          (hduIndex == 0 || cards.get("XTENSION").exists(_.trim == "IMAGE"))
     }
-    throw new IllegalStateException("unreachable: the walk exits via return or EOF")
+    imageSpec(cards, offset)
   }
 
   /** Tile-compressed IMAGE (the fpack DEFAULT shape, ZIMAGE=T — a18's
@@ -781,15 +767,24 @@ object FitsFormat {
   final case class TiledImageSpec(zbitpix: Int, width: Long, height: Long,
       tileRows: Int, cmpType: String, bscale: Double, bzero: Double,
       blank: Option[Long], dataOffset: Long, nTiles: Long, theap: Long,
-      recordBytes: Int = 8, quant: Boolean = false, depth: Long = 1L,
-      wcs: Option[Wcs] = None, wcsCd: Option[CdTanWcs] = None) {
-    def bytesPerPx: Int = math.abs(zbitpix) / 8
+      pcount: Long, recordBytes: Int = 8, quant: Boolean = false,
+      depth: Long = 1L, wcs: Option[Wcs] = None,
+      wcsCd: Option[CdTanWcs] = None) extends ImageHdu {
+    def bitpix: Int = zbitpix
+    /** Bytes per decompressed pixel code: the quantized layout stores
+      * int16 codes whatever ZBITPIX says.
+      */
+    def codeBytes: Int = if (quant) 2 else bytesPerPx
     /** Byte offset of tile t's stored record — the (length, heapOffset)
       * 1PB descriptor, followed in the QUANTIZED layout by that tile's
       * ZSCALE and ZZERO doubles (record = 8 + 16 bytes).
       */
     def descOffset(t: Long): Long = dataOffset + t * recordBytes
     def heapStart: Long = dataOffset + theap
+    /** The heap's size: the data unit (records + PCOUNT) past THEAP. Every
+      * tile descriptor must stay inside it.
+      */
+    def heapSize: Long = recordBytes.toLong * nTiles + pcount - theap
     /** Row-band tiles per plane; a 2-d frame is the depth=1 case, so
       * every 2-d accessor below reduces to the pre-cube form there.
       */
@@ -847,43 +842,21 @@ object FitsFormat {
       cards.get("BSCALE").map(_.toDouble).getOrElse(1.0),
       cards.get("BZERO").map(_.toDouble).getOrElse(0.0),
       cards.get("ZBLANK").map(_.trim.toLong), dataOffset, nTiles, theap,
-      recordBytes, quant, depth, Wcs.of(cards), Wcs.cdTanOf(cards))
+      cards.getOrElse("PCOUNT", "0").trim.toLong, recordBytes, quant, depth,
+      Wcs.of(cards), Wcs.cdTanOf(cards))
   }
 
   /** Locates the n-th tile-compressed IMAGE HDU (a BINTABLE extension
-    * carrying ZIMAGE=T) — `locateImage`'s walk with the compressed-image
-    * predicate; plain IMAGE HDUs and ordinary/ZTABLE bintables are
-    * walked over, so mixed archives address each shape independently.
+    * carrying ZIMAGE=T); plain IMAGE HDUs and ordinary/ZTABLE bintables
+    * are walked over, so mixed archives address each shape independently.
     */
   def locateTiledImage(in: java.io.DataInput, imgnum: Int): TiledImageSpec = {
-    var offset = 0L
-    var seen = 0
-    while (true) {
-      val (cards, headerBytes) =
-        try readHeader(in)
-        catch { case e: java.io.EOFException =>
-          throw new IllegalArgumentException(
-            s"No tile-compressed image HDU #$imgnum found ($seen in file) " +
-              "— or the file is truncated mid-HDU", e)
-        }
-      offset += headerBytes
-      val dataBytes = dataUnitBytes(cards)
-      val padded = ((dataBytes + BlockSize - 1) / BlockSize) * BlockSize
-      val isTiledImage = cards.get("XTENSION").exists(_.startsWith("BINTABLE")) &&
+    val (cards, offset) = locateNth(in, imgnum,
+      seen => s"No tile-compressed image HDU #$imgnum found ($seen in file)") {
+      (cards, _) => cards.get("XTENSION").exists(_.startsWith("BINTABLE")) &&
         cards.get("ZIMAGE").exists(_.trim == "T")
-      if (isTiledImage) {
-        if (seen == imgnum) return tiledImageSpec(cards, offset)
-        seen += 1
-      }
-      var toSkip = padded
-      while (toSkip > 0) {
-        val n = in.skipBytes(math.min(toSkip, Int.MaxValue.toLong).toInt)
-        if (n <= 0) throw new java.io.EOFException("Unexpected EOF skipping FITS data")
-        toSkip -= n
-      }
-      offset += padded
     }
-    throw new IllegalStateException("unreachable: the walk exits via return or EOF")
+    tiledImageSpec(cards, offset)
   }
 
   /** The HDU data-unit size rule (FITS 4.0 §4.4.1.1) — shared by the
@@ -901,11 +874,6 @@ object FitsFormat {
     }
   }
 
-  /** Locates the target table extension (BINTABLE or ASCII TABLE):
-    * returns (cards, dataStartOffset). Walks HDUs sequentially, skipping
-    * each HDU's (2880-padded) data unit. `extnum` counts table extensions
-    * of either flavor in file order.
-    */
   /** One walked HDU: header cards plus its exact byte geometry (data
     * length is block-padded — the on-disk extent, not the logical one).
     */
@@ -933,13 +901,7 @@ object FitsFormat {
       val dataBytes = dataUnitBytes(cards)
       val padded = ((dataBytes + BlockSize - 1) / BlockSize) * BlockSize
       out += HduLoc(cards, consumed, headerBytes, padded)
-      var toSkip = padded
-      while (toSkip > 0) {
-        val k = in.skipBytes(math.min(toSkip, Int.MaxValue.toLong).toInt)
-        if (k <= 0)
-          throw new java.io.EOFException("Unexpected EOF skipping FITS data")
-        toSkip -= k
-      }
+      skipFully(in, padded)
       consumed += headerBytes + padded
     }
     out.result()
@@ -949,47 +911,78 @@ object FitsFormat {
   def listHdus(in: java.io.DataInput, totalBytes: Long): Seq[Map[String, String]] =
     walkHdus(in, totalBytes).map(_.cards)
 
-  def locateTable(in: java.io.DataInput, extnum: Int): (Map[String, String], Long) = {
+  /** Locates the target table extension (BINTABLE or ASCII TABLE):
+    * returns (cards, dataStartOffset). Walks HDUs sequentially, skipping
+    * each HDU's (2880-padded) data unit. `extnum` counts table extensions
+    * of either flavor in file order.
+    */
+  def locateTable(in: java.io.DataInput, extnum: Int): (Map[String, String], Long) =
+    locateNth(in, extnum,
+      seen => s"No table extension #$extnum found ($seen table HDUs in file)") {
+      (cards, _) => cards.get("XTENSION").exists(x =>
+        x.startsWith("BINTABLE") || x.trim == "TABLE")
+    }
+
+  /** The one HDU walk behind the locate functions: the cards and data
+    * offset of the `n`-th HDU that `kind` accepts (given the cards and the
+    * HDU's index in the file, the primary being 0). There is no HDU cap:
+    * every iteration consumes at least one 2880-byte block, so the stream
+    * length bounds the walk. End of stream during a header read means the
+    * walk passed the last HDU (or the file is truncated mid-HDU) and is
+    * reported as `notFound(kinds seen)`.
+    */
+  private def locateNth(in: java.io.DataInput, n: Int, notFound: Int => String)(
+      kind: (Map[String, String], Int) => Boolean): (Map[String, String], Long) = {
     var offset = 0L
-    var bintablesSeen = 0
-    // no HDU cap (the walkHdus argument): every iteration consumes at
-    // least one 2880-byte block or throws EOF, so the stream length
-    // bounds the walk — the former `< 100` "defensive bound" made
-    // extensions past HDU 100 (large mosaic cameras) unreachable
+    var seen = 0
+    var hduIndex = 0
     while (true) {
-      // same EOF→not-found conversion as locateImage: a file with fewer
-      // table HDUs than `extnum` is a user error, not a corrupt stream
       val (cards, headerBytes) =
         try readHeader(in)
         catch { case e: java.io.EOFException =>
           throw new IllegalArgumentException(
-            s"No table extension #$extnum found ($bintablesSeen table HDUs " +
-              "in file) — or the file is truncated mid-HDU", e)
+            notFound(seen) + " — or the file is truncated mid-HDU", e)
         }
       offset += headerBytes
-      val dataBytes = dataUnitBytes(cards)
-      val padded = ((dataBytes + BlockSize - 1) / BlockSize) * BlockSize
-      val isTable = cards.get("XTENSION").exists(x =>
-        x.startsWith("BINTABLE") || x.trim == "TABLE")
-      if (isTable) {
-        if (bintablesSeen == extnum) return (cards, offset)
-        bintablesSeen += 1
+      if (kind(cards, hduIndex)) {
+        if (seen == n) return (cards, offset)
+        seen += 1
       }
-      // skip the data unit
-      var toSkip = padded
-      while (toSkip > 0) {
-        val n = in.skipBytes(math.min(toSkip, Int.MaxValue.toLong).toInt)
-        if (n <= 0) throw new java.io.EOFException("Unexpected EOF skipping FITS data")
-        toSkip -= n
-      }
+      val padded = ((dataUnitBytes(cards) + BlockSize - 1) / BlockSize) * BlockSize
+      skipFully(in, padded)
       offset += padded
+      hduIndex += 1
     }
     throw new IllegalStateException("unreachable: the walk exits via return or EOF")
   }
 
-  /** Back-compat alias (pre-ASCII-TABLE name). */
-  def locateBintable(in: java.io.DataInput, extnum: Int): (Map[String, String], Long) =
-    locateTable(in, extnum)
+  private def skipFully(in: java.io.DataInput, bytes: Long): Unit = {
+    var toSkip = bytes
+    while (toSkip > 0) {
+      val n = in.skipBytes(math.min(toSkip, Int.MaxValue.toLong).toInt)
+      if (n <= 0) throw new java.io.EOFException("Unexpected EOF skipping FITS data")
+      toSkip -= n
+    }
+  }
+
+  /** Where a data-unit read happens: a file and one of its HDUs (`hdu`
+    * names it, e.g. "table extension #0" or "image HDU #1"). Every
+    * corruption error of the table and image readers is built here, so
+    * all of them name the file, the HDU and the byte offset alike.
+    */
+  private[fits] final case class DataUnit(path: String, hdu: String) {
+    def corrupt(what: String, offset: Long, cause: Throwable = null): java.io.IOException =
+      new java.io.IOException(s"FITS file '$path', $hdu: $what at byte offset $offset", cause)
+
+    /** A read whose stream ends early, or whose gzip data is corrupt,
+      * fails as `corrupt`.
+      */
+    def reading(what: => String, at: Long)(read: => Unit): Unit =
+      try read
+      catch { case e @ (_: java.io.EOFException | _: java.util.zip.ZipException) =>
+        throw corrupt(what, at, e)
+      }
+  }
 
   // ------------------------------------------------------------ cell decode
 

@@ -108,6 +108,20 @@ object FitsWriter {
   private def blockPad(n: Long): Long =
     (FitsFormat.BlockSize - n % FitsFormat.BlockSize) % FitsFormat.BlockSize
 
+  /** The local file an executor-side positioned writer opens. Each task
+    * of those writers opens `path` itself and writes its own byte range,
+    * so `path` must be a filesystem path that every executor shares (a
+    * local disk in local mode, a shared mount on a cluster). A `file:` URI
+    * names such a path; any other `scheme://` path is refused up front
+    * rather than written as a local file of that name.
+    */
+  private[fits] def sharedLocalFile(path: String): java.io.File =
+    if (path.startsWith("file:")) new java.io.File(java.net.URI.create(path))
+    else if (path.matches("^[a-zA-Z][a-zA-Z0-9+.-]*://.*"))
+      throw new IllegalArgumentException(s"FITS positioned export needs a " +
+        s"filesystem path every executor shares; '$path' is not one")
+    else new java.io.File(path)
+
   /** Numeric element: (TFORM code, byte width, big-endian putter). */
   private def elem(dt: DataType): (Char, Int, (ByteBuffer, Any) => Unit) = dt match {
     case ShortType => ('I', 2, (b, v) => b.putShort(v.asInstanceOf[Short]))
@@ -425,6 +439,8 @@ object FitsWriter {
     * and its heap range at THEAP + Σ earlier heap bytes, with P/Q
     * descriptors offset by its heap base. File row order = partition
     * order, so a range-sorted (`orderBy`) input exports globally sorted.
+    * `path` must be a filesystem path that every executor shares
+    * (`sharedLocalFile`): each task opens it to write its own byte range.
     */
   def writeDataFrame(path: String, df: DataFrame,
       strLens: Map[String, Int] = Map.empty,
@@ -433,6 +449,7 @@ object FitsWriter {
       tdims: Map[String, Seq[Int]] = Map.empty,
       bitCols: Map[String, Int] = Map.empty,
       extraCardBytes: Array[Byte] = Array.empty): Unit = {
+    val file = sharedLocalFile(path)
     val schema = df.schema
     validateLayout(schema, arrayLens, varCols, tdims, bitCols)
     val codec = new BinCodec(schema, strLens, arrayLens, varCols, bitCols)
@@ -465,7 +482,7 @@ object FitsWriter {
       val recordsStart = header.length.toLong
       val theap = codec.rowBytes.toLong * nRows // THEAP default: heap follows records
       val dataEnd = recordsStart + theap + pcount
-      val raf = new RandomAccessFile(path, "rw")
+      val raf = new RandomAccessFile(file, "rw")
       try {
         raf.setLength(0)
         raf.setLength(dataEnd + blockPad(dataEnd - recordsStart)) // zero fill
@@ -475,7 +492,7 @@ object FitsWriter {
       val heapRelBase = stats.scanLeft(0L)((a, s) => a + s._3)
       rdd.mapPartitionsWithIndex { (pid, it) =>
         if (it.hasNext) {
-          val f = new RandomAccessFile(path, "rw")
+          val f = new RandomAccessFile(file, "rw")
           try {
             val ch = f.getChannel
             val rec = new RegionWriter(ch, recOff(pid))
@@ -639,9 +656,12 @@ object FitsWriter {
     *
     * The export is what the tiled READER path scans in parallel: each
     * tile decompresses independently, so splits are tile ranges.
+    * `path` must be a filesystem path that every executor shares
+    * (`sharedLocalFile`): each task opens it to write its own byte range.
     */
   def writeTiledDataFrame(path: String, df: DataFrame, tileLen: Int,
       strLens: Map[String, Int] = Map.empty): Unit = {
+    val file = sharedLocalFile(path)
     require(tileLen > 0, s"tileLen must be positive, got $tileLen")
     val cols = tiledCols(df.schema, strLens)
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -693,7 +713,7 @@ object FitsWriter {
         val storedRowBytes = cols.length * 8
         val theap = storedRowBytes.toLong * nTiles
         val dataEnd = recordsStart + theap + pcount
-        val raf = new RandomAccessFile(path, "rw")
+        val raf = new RandomAccessFile(file, "rw")
         try {
           raf.setLength(0)
           raf.setLength(dataEnd + blockPad(dataEnd - recordsStart))
@@ -719,7 +739,7 @@ object FitsWriter {
         aligned.mapPartitions { it =>
           val tiles = compressTiles(it, tileLen, cols)
           if (tiles.hasNext) {
-            val f = new RandomAccessFile(path, "rw")
+            val f = new RandomAccessFile(file, "rw")
             try {
               val ch = f.getChannel
               tiles.foreach { case (t, blobs) =>
@@ -863,10 +883,13 @@ object FitsWriter {
     * partition p's records start at recordsStart + NAXIS1 × Σ earlier
     * partition counts. Same shared-filesystem requirement as
     * `writeDataFrame`.
+    * `path` must be a filesystem path that every executor shares
+    * (`sharedLocalFile`): each task opens it to write its own byte range.
     */
   def writeAsciiDataFrame(path: String, df: DataFrame,
       strLens: Map[String, Int] = Map.empty,
       dblFmt: (Int, Int) = (14, 4)): Unit = {
+    val file = sharedLocalFile(path)
     val codec = new AsciiCodec(df.schema, strLens, dblFmt)
     val rdd = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -877,7 +900,7 @@ object FitsWriter {
       val header = asciiHeader(codec, nRows)
       val recordsStart = header.length.toLong
       val dataBytes = codec.rowBytes.toLong * nRows
-      val raf = new RandomAccessFile(path, "rw")
+      val raf = new RandomAccessFile(file, "rw")
       try {
         raf.setLength(0)
         raf.setLength(recordsStart + dataBytes + blockPad(dataBytes))
@@ -889,7 +912,7 @@ object FitsWriter {
       val recOff = counts.scanLeft(recordsStart)((a, c) => a + c._2 * codec.rowBytes)
       rdd.mapPartitionsWithIndex { (pid, it) =>
         if (it.hasNext) {
-          val f = new RandomAccessFile(path, "rw")
+          val f = new RandomAccessFile(file, "rw")
           try {
             val rec = new RegionWriter(f.getChannel, recOff(pid))
             it.foreach(r => rec.write(codec.encode(r)))
@@ -1457,9 +1480,12 @@ object FitsWriter {
     * back through `locateTiledImage` + TileCodec (the a27 reader), and
     * a28's gate hash-proves the round-trip against the closed-form
     * oracle.
+    * `path` must be a filesystem path that every executor shares
+    * (`sharedLocalFile`): each task opens it to write its own byte range.
     */
   def writeTiledImageDataFrame(path: String, df: DataFrame, width: Int,
       tileRows: Int, scaling: Seq[(String, String)] = Seq.empty): Unit = {
+    val file = sharedLocalFile(path)
     require(tileRows > 0, s"tileRows must be positive, got $tileRows")
     require(width > 0, s"width must be positive, got $width")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
@@ -1555,7 +1581,7 @@ object FitsWriter {
         val recordsStart = primary.length.toLong + ext.length
         val theap = 8L * nTiles
         val dataEnd = recordsStart + theap + pcount
-        val raf = new RandomAccessFile(path, "rw")
+        val raf = new RandomAccessFile(file, "rw")
         try {
           raf.setLength(0)
           raf.setLength(dataEnd + blockPad(dataEnd - recordsStart))
@@ -1571,7 +1597,7 @@ object FitsWriter {
         aligned.mapPartitions { it =>
           val tiles = compress(it)
           if (tiles.hasNext) {
-            val f = new RandomAccessFile(path, "rw")
+            val f = new RandomAccessFile(file, "rw")
             try {
               val ch = f.getChannel
               tiles.foreach { case (t, blob) =>

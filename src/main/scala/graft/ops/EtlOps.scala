@@ -448,9 +448,14 @@ object EtlOps {
       dirs.mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
       java.nio.file.StandardOpenOption.CREATE_NEW)
 
-  private[graft] def readManifest(path: String): Seq[String] =
-    new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)),
-      java.nio.charset.StandardCharsets.UTF_8).split("\n").toSeq.filter(_.nonEmpty)
+  /** A manifest's file list, read through the session's Hadoop FS. */
+  private[graft] def readManifest(path: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val in = p.getFileSystem(graft.fits.FitsTable.driverHadoopConf()).open(p)
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+      .split("\n").toSeq.filter(_.nonEmpty)
+    finally in.close()
+  }
 
   /** b16: cascading erasure (the GDPR forget-me shape) — delete a set of
     * customers and propagate through the foreign-key chain: their orders

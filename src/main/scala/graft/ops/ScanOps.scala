@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{OpQuery, Tables}
+import graft.fits.{FitsImage, PixelRow}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -261,6 +262,76 @@ object ScanOps {
     },
     "SELECT * FROM supplier ORDER BY s_suppkey")
 
+  /** n_valid, sum, min and max of `q` over a row's non-null pixels: the
+    * per-row stats the image source keys emit.
+    */
+  private def rowStats(p: PixelRow)(q: Int => Long): (Long, Long, Long, Long) = {
+    var n = 0L; var sum = 0L
+    var mn = Long.MaxValue; var mx = Long.MinValue
+    var i = 0
+    while (i < p.width) {
+      if (!p.isNull(i)) {
+        val v = q(i)
+        n += 1; sum += v
+        if (v < mn) mn = v
+        if (v > mx) mx = v
+      }
+      i += 1
+    }
+    (n, sum, mn, mx)
+  }
+
+  /** A planted pixel as an exact integer: integer pixels as they are,
+    * float32 pixels ×4 (quarter-integers), float64 pixels ×8
+    * (eighth-integers).
+    */
+  private def planted(p: PixelRow)(i: Int): Long = p.bitpix match {
+    case -32 => (p.double(i) * 4.0).toLong
+    case -64 => (p.double(i) * 8.0).toLong
+    case _ => p.long(i)
+  }
+
+  /** The a19/a25/a27/a28/a31 read: `rowStats` of the planted values of
+    * every row of `hdus` (hdu is 1-based), through the FitsImage reader.
+    */
+  private[graft] def imageStats(s: SparkSession, hdus: Seq[FitsImage.Hdu]): DataFrame = {
+    import s.implicits._
+    FitsImage.rows(s, hdus) { p =>
+      val (n, sum, mn, mx) = rowStats(p)(planted(p))
+      (p.hdu + 1L, p.z, p.y, n, sum, mn, mx)
+    }.toDF("hdu", "z", "y", "n_valid", "sum_q", "min_q", "max_q")
+  }
+
+  /** The cutout keys' dump (a20, a26, a30, a34-a36, a38, a39): each row of
+    * the HDU's crop box with its decoded pixels CSV-joined ('null' at
+    * BLANK). The reader touches only the box's bytes of a plain image, or
+    * the tiles covering it.
+    */
+  private[graft] def cutout(s: SparkSession, hdu: FitsImage.Hdu): DataFrame = {
+    import s.implicits._
+    FitsImage.rows(s, Seq(hdu)) { p =>
+      (p.z, p.y, (0 until p.width).map(i =>
+        if (p.isNull(i)) "null" else p.long(i).toString).mkString(","))
+    }.toDF("z", "y", "px")
+  }
+
+  /** The a29/a33 read: one quantized compressed-image extension (the
+    * 24-byte [1PB, ZSCALE, ZZERO] record layout, decoded per its ZCMPTYPE)
+    * as the exact floor(v·10⁶) per-row stats.
+    */
+  private[graft] def quantizedStats(s: SparkSession, path: String): DataFrame = {
+    import s.implicits._
+    val img = FitsImage.tiledImage(path, 0)
+    require(img.spec match {
+      case t: graft.fits.FitsFormat.TiledImageSpec => t.quant
+      case _ => false
+    }, "expected the quantized record layout")
+    FitsImage.rows(s, Seq(img)) { p =>
+      val (n, sum, mn, mx) = rowStats(p)(i => math.floor(p.double(i) * 1.0e6).toLong)
+      (p.y, n, sum, mn, mx)
+    }.toDF("y", "n_valid", "sum_q6", "min_q6", "max_q6").orderBy("y")
+  }
+
   /** a19: FITS IMAGE HDU source — the astronomy-native raster, completing
     * the FITS surface beyond tables (SURVEY §1.1 scopes fits2db to table
     * extensions; images are the other half of every survey's archive).
@@ -271,93 +342,24 @@ object ScanOps {
     * missing conventions on one mask, plus the scaling path (§5.3).
     * Height scales with the SF (one row per document).
     *
-    * Read shape: the op scans the image with ROW-RANGE splits — each
-    * partition opens the file, locates both image HDUs from the headers
-    * (the shared locateImage walk), then positioned-reads ONLY its rows'
-    * byte ranges: rows are independently addressable (fixed width·bitpix
-    * stride), so one huge frame parallelizes exactly like the BINTABLE
-    * reader's row splits. Per row it emits exact-integer stats of the
+    * Read shape: the FitsImage reader scans the image with ROW-RANGE
+    * splits — each task opens the file once through Hadoop FS and
+    * positioned-reads ONLY its rows' byte ranges: rows are independently
+    * addressable (fixed width·bitpix stride), so one huge frame
+    * parallelizes exactly like the BINTABLE reader's row splits. Per row it emits exact-integer stats of the
     * DECODED physical values (floats quantized ×4 — exact, pixels are
     * quarter-integers), so wrong byte order, scaling, masking, or HDU
     * addressing all hash-mismatch against the closed-form oracle.
     */
   val a19_fits_image_source = OpQuery(
     (s, d) => {
-      import s.implicits._
-      val height = t(s, d, "documents").count() // fixture size, not data
-      // build-once scaffolding (r8 #7): the op under test is the READER
+      // build-once scaffolding (r8 #7): the op under test is the READER;
+      // the frame's height is read back from its header
       val path = graft.Util.fixtureOnce(
         s"survey_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")(p =>
-        graft.fits.FitsWriter.writeImageFits(p, 64, height))
-      // split count derives from the DATA (r10 verdict #3: the tiled
-      // readers' convention ported back to the plain-raster paths) —
-      // one driver-side header walk prices a row unit (both HDUs' rows)
-      val rowUnitBytes = {
-        val raf = new java.io.RandomAccessFile(path, "r")
-        try {
-          raf.seek(0)
-          val b1 = graft.fits.FitsFormat.locateImage(raf, 0).rowBytes
-          raf.seek(0)
-          b1 + graft.fits.FitsFormat.locateImage(raf, 1).rowBytes
-        } finally raf.close()
-      }
-      s.range(0, height, 1, tileSplits(height, rowUnitBytes))
-        .mapPartitions { ys =>
-        if (!ys.hasNext) Iterator.empty
-        else {
-          // opened lazily per non-empty split; the completion listener
-          // closes the handle after the last row drains (or on task
-          // failure), so the iterator STREAMS instead of buffering the
-          // partition (r10 verdict #3 retired the `.toVector` forced by
-          // the old `finally raf.close()` scoping)
-          val raf = new java.io.RandomAccessFile(path, "r")
-          Option(org.apache.spark.TaskContext.get()).foreach(
-            _.addTaskCompletionListener[Unit](_ => raf.close()))
-          raf.seek(0)
-          val s1 = graft.fits.FitsFormat.locateImage(raf, 0)
-          raf.seek(0)
-          val s2 = graft.fits.FitsFormat.locateImage(raf, 1)
-          val buf1 = new Array[Byte](s1.rowBytes.toInt)
-          val buf2 = new Array[Byte](s2.rowBytes.toInt)
-          ys.flatMap { yy =>
-            val y = yy.toLong
-            raf.seek(s1.dataOffset + y * s1.rowBytes)
-            raf.readFully(buf1)
-            val bb1 = java.nio.ByteBuffer.wrap(buf1) // FITS is big-endian
-            var n1 = 0L; var sum1 = 0L
-            var mn1 = Long.MaxValue; var mx1 = Long.MinValue
-            var x = 0
-            while (x < s1.width) {
-              val raw = bb1.getShort(x * 2).toLong
-              if (!s1.blank.contains(raw)) {
-                val q = (s1.bzero + s1.bscale * raw).toLong // exact ints
-                n1 += 1; sum1 += q
-                if (q < mn1) mn1 = q
-                if (q > mx1) mx1 = q
-              }
-              x += 1
-            }
-            raf.seek(s2.dataOffset + y * s2.rowBytes)
-            raf.readFully(buf2)
-            val bb2 = java.nio.ByteBuffer.wrap(buf2)
-            var n2 = 0L; var sum2 = 0L
-            var mn2 = Long.MaxValue; var mx2 = Long.MinValue
-            x = 0
-            while (x < s2.width) {
-              val v = bb2.getFloat(x * 4)
-              if (!v.isNaN) {
-                val q = (v * 4.0f).toLong // quarter-int pixels: exact
-                n2 += 1; sum2 += q
-                if (q < mn2) mn2 = q
-                if (q > mx2) mx2 = q
-              }
-              x += 1
-            }
-            Iterator((1L, y, n1, sum1, mn1, mx1), (2L, y, n2, sum2, mn2, mx2))
-          }
-        }
-      }.toDF("hdu", "y", "n_valid", "sum_q", "min_q", "max_q")
-        .orderBy("hdu", "y")
+        graft.fits.FitsWriter.writeImageFits(p, 64, t(s, d, "documents").count()))
+      imageStats(s, Seq(FitsImage.image(path, 0), FitsImage.image(path, 1)))
+        .drop("z").orderBy("hdu", "y")
     },
     """WITH ys AS (SELECT unnest(range(0, (SELECT count(*) FROM documents))) AS y),
       |v AS (SELECT y, unnest(list_transform(range(0, 64),
@@ -393,14 +395,13 @@ object ScanOps {
     */
   val a20_fits_image_cutout = OpQuery(
     (s, d) => {
-      import s.implicits._
-      val height = t(s, d, "documents").count()
       // build-once scaffolding (r8 #7): the op under test is the cutout
       val path = graft.Util.fixtureOnce(
         s"survey_${d.replaceAll("[^a-zA-Z0-9]", "_")}_cut.fits")(p =>
-        graft.fits.FitsWriter.writeImageFits(p, 64, height))
-      val (y0, y1, x0, x1) = (height / 4, height / 2, 16, 48)
-      imageCutoutFrame(s, path, y0, y1, x0, x1).orderBy("y")
+        graft.fits.FitsWriter.writeImageFits(p, 64, t(s, d, "documents").count()))
+      val img = FitsImage.image(path, 0)
+      val h = img.spec.height
+      cutout(s, img.crop(h / 4, h / 2, 16, 48)).drop("z").orderBy("y")
     },
     """WITH b AS (SELECT (SELECT count(*) FROM documents) AS h),
       |ys AS (SELECT unnest(range(h // 4, h // 2)) AS y FROM b)
@@ -431,76 +432,13 @@ object ScanOps {
     */
   val a25_fits_cube_source = OpQuery(
     (s, d) => {
-      import s.implicits._
-      val depth = t(s, d, "documents").count() / 64 + 2 // ≥2 planes at any SF
-      val h = 64L
-      // build-once scaffolding (r8 #7): the op under test is the READER
+      // build-once scaffolding (r8 #7): the op under test is the READER;
+      // ≥2 planes at any SF, read back from the header's NAXIS3
       val path = graft.Util.fixtureOnce(
         s"cube_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")(p =>
-        graft.fits.FitsWriter.writeCubeFits(p, 64, h, depth))
-      // split count from the data: the widest extension's row prices
-      // the unit (one driver-side header walk, the r10 convention)
-      val maxRowBytes = {
-        val raf = new java.io.RandomAccessFile(path, "r")
-        try (0 until 4).map { i =>
-          raf.seek(0); graft.fits.FitsFormat.locateImage(raf, i).rowBytes
-        }.max finally raf.close()
-      }
-      s.range(0, 4L * depth * h, 1, tileSplits(4L * depth * h, maxRowBytes))
-        .mapPartitions { rs =>
-        if (!rs.hasNext) Iterator.empty
-        else {
-          val raf = new java.io.RandomAccessFile(path, "r")
-          Option(org.apache.spark.TaskContext.get()).foreach(
-            _.addTaskCompletionListener[Unit](_ => raf.close()))
-          val specs = (0 until 4).map { i =>
-            raf.seek(0); graft.fits.FitsFormat.locateImage(raf, i)
-          }
-          val bufs = specs.map(sp => new Array[Byte](sp.rowBytes.toInt)).toArray
-          rs.map { r =>
-            val hdu = (r / (depth * h)).toInt
-            val rem = r % (depth * h)
-            val z = rem / h
-            val y = rem % h
-            val sp = specs(hdu)
-            val buf = bufs(hdu)
-            raf.seek(sp.rowOffset(z, y))
-            raf.readFully(buf)
-            val bb = java.nio.ByteBuffer.wrap(buf) // FITS is big-endian
-            var n = 0L; var sum = 0L
-            var mn = Long.MaxValue; var mx = Long.MinValue
-            var x = 0
-            while (x < sp.width) {
-              var valid = true
-              var q = 0L
-              sp.bitpix match {
-                case 8 =>
-                  val raw = (bb.get(x) & 0xff).toLong // unsigned per FITS 4.0
-                  if (sp.blank.contains(raw)) valid = false
-                  else q = (sp.bzero + sp.bscale * raw).toLong // exact ints
-                case 32 =>
-                  val raw = bb.getInt(x * 4).toLong
-                  if (sp.blank.contains(raw)) valid = false
-                  else q = (sp.bzero + sp.bscale * raw).toLong
-                case 64 =>
-                  val raw = bb.getLong(x * 8)
-                  if (sp.blank.contains(raw)) valid = false else q = raw
-                case -64 =>
-                  val v = bb.getDouble(x * 8)
-                  if (v.isNaN) valid = false
-                  else q = (v * 8.0).toLong // eighth-integer pixels: exact
-              }
-              if (valid) {
-                n += 1; sum += q
-                if (q < mn) mn = q
-                if (q > mx) mx = q
-              }
-              x += 1
-            }
-            (hdu + 1L, z, y, n, sum, mn, mx)
-          }
-        }
-      }.toDF("hdu", "z", "y", "n_valid", "sum_q", "min_q", "max_q")
+        graft.fits.FitsWriter.writeCubeFits(p, 64, 64L,
+          t(s, d, "documents").count() / 64 + 2))
+      imageStats(s, (0 until 4).map(FitsImage.image(path, _)))
         .orderBy("hdu", "z", "y")
     },
     """WITH b AS (SELECT ((SELECT count(*) FROM documents) // 64 + 2) AS d),
@@ -540,14 +478,14 @@ object ScanOps {
     */
   val a26_fits_cube_cutout = OpQuery(
     (s, d) => {
-      import s.implicits._
-      val depth = t(s, d, "documents").count() / 64 + 2
-      val h = 64L
       // build-once scaffolding (r8 #7): the op under test is the cutout
       val path = graft.Util.fixtureOnce(
         s"cube_${d.replaceAll("[^a-zA-Z0-9]", "_")}_cut.fits")(p =>
-        graft.fits.FitsWriter.writeCubeFits(p, 64, h, depth))
-      cubeCutoutFrame(s, path, 1L, depth, 16L, 48L, 8, 40).orderBy("z", "y")
+        graft.fits.FitsWriter.writeCubeFits(p, 64, 64L,
+          t(s, d, "documents").count() / 64 + 2))
+      val cube = FitsImage.image(path, 1) // the int32 extension
+      cutout(s, cube.crop(16L, 48L, 8, 40, 1L, cube.spec.depth))
+        .orderBy("z", "y")
     },
     """WITH b AS (SELECT ((SELECT count(*) FROM documents) // 64 + 2) AS d),
       |zs AS (SELECT unnest(range(1, (SELECT d FROM b))) AS z),
@@ -557,42 +495,6 @@ object ScanOps {
       |       ELSE CAST(2 * ((3 * y + 5 * x + 11 * z + 7) % 251) - 500 AS VARCHAR)
       |       END), ',') AS px
       |FROM zs CROSS JOIN ys ORDER BY z, y""".stripMargin)
-
-  /** The a20/a36 read core: a row range of the plain int16 image
-    * extension, positioned-reading ONLY the cutout's columns inside
-    * each row; splits derive from the CUTOUT's bytes (not the frame's),
-    * the iterator owns the file handle (r10 read convention). y1/x1 are
-    * EXCLUSIVE.
-    */
-  private def imageCutoutFrame(s: SparkSession, path: String,
-      y0: Long, y1: Long, x0: Int, x1: Int): DataFrame = {
-    import s.implicits._
-    s.range(y0, y1, 1, tileSplits(y1 - y0, (x1 - x0).toLong * 2))
-      .mapPartitions { ys =>
-        if (!ys.hasNext) Iterator.empty
-        else {
-          val raf = new java.io.RandomAccessFile(path, "r")
-          Option(org.apache.spark.TaskContext.get()).foreach(
-            _.addTaskCompletionListener[Unit](_ => raf.close()))
-          raf.seek(0)
-          val spec = graft.fits.FitsFormat.locateImage(raf, 0)
-          val buf = new Array[Byte]((x1 - x0) * 2)
-          ys.map { yy =>
-            val y = yy.toLong
-            // seek INSIDE the row: only the cutout's columns are read
-            raf.seek(spec.dataOffset + y * spec.rowBytes + x0.toLong * 2)
-            raf.readFully(buf)
-            val bb = java.nio.ByteBuffer.wrap(buf)
-            val px = (0 until (x1 - x0)).map { i =>
-              val raw = bb.getShort(i * 2).toLong
-              if (spec.blank.contains(raw)) "null"
-              else (spec.bzero + spec.bscale * raw).toLong.toString
-            }
-            (y, px.mkString(","))
-          }
-        }
-      }.toDF("y", "px")
-  }
 
   /** a36: MOSAIC cutout — the multi-frame archive service shape (a34 is
     * one frame; a real survey is thousands of frames, each with its own
@@ -657,8 +559,8 @@ object ScanOps {
         for {
           (x0, x1) <- w.xRange(raLo, raHi, r.getAs[Long]("width"))
           (y0, y1) <- w.yRange(decLo, decHi, r.getAs[Long]("height"))
-        } yield imageCutoutFrame(s, r.getAs[String]("file"),
-            y0, y1 + 1, x0.toInt, x1.toInt + 1)
+        } yield cutout(s, FitsImage.image(r.getAs[String]("file"), 0)
+            .crop(y0, y1 + 1, x0.toInt, x1.toInt + 1))
           .select(lit(r.getAs[Long]("frame")).as("frame"), col("y"),
             (lit(w.crval2) +
               (col("y") + lit(1L) - lit(w.crpix2)) * lit(w.cdelt2)).as("dec"),
@@ -703,44 +605,6 @@ object ScanOps {
       |       END), ',') AS px
       |FROM ys ORDER BY frame, y""".stripMargin)
 
-  /** The a26/a35 read core: a (plane, row) range of the int32 cube
-    * extension, positioned-reading ONLY the cutout's columns inside
-    * each row (a20's rule on 3 axes); splits priced by the cutout's
-    * row slice, the iterator owns the file handle (r10 read convention).
-    * z1/y1/x1 are EXCLUSIVE.
-    */
-  private def cubeCutoutFrame(s: SparkSession, path: String,
-      z0: Long, z1: Long, y0: Long, y1: Long, x0: Int, x1: Int): DataFrame = {
-    import s.implicits._
-    s.range(0, (z1 - z0) * (y1 - y0), 1,
-        tileSplits((z1 - z0) * (y1 - y0), (x1 - x0).toLong * 4))
-      .mapPartitions { is =>
-        if (!is.hasNext) Iterator.empty
-        else {
-          val raf = new java.io.RandomAccessFile(path, "r")
-          Option(org.apache.spark.TaskContext.get()).foreach(
-            _.addTaskCompletionListener[Unit](_ => raf.close()))
-          raf.seek(0)
-          val sp = graft.fits.FitsFormat.locateImage(raf, 1) // the int32 ext
-          val buf = new Array[Byte]((x1 - x0) * 4)
-          is.map { i =>
-            val z = z0 + i / (y1 - y0)
-            val y = y0 + i % (y1 - y0)
-            // seek INSIDE the plane's row: only the cutout's columns read
-            raf.seek(sp.rowOffset(z, y) + x0.toLong * 4)
-            raf.readFully(buf)
-            val bb = java.nio.ByteBuffer.wrap(buf)
-            val px = (0 until (x1 - x0)).map { j =>
-              val raw = bb.getInt(j * 4).toLong
-              if (sp.blank.contains(raw)) "null"
-              else (sp.bzero + sp.bscale * raw).toLong.toString
-            }
-            (z, y, px.mkString(","))
-          }
-        }
-      }.toDF("z", "y", "px")
-  }
-
   /** a35: SKY+SPECTRAL-addressed cube cutout — a34's request shape on a
     * NAXIS=3 cube (the radio/IFU archive service: RA × Dec × velocity):
     * the writer plants a third linear WCS axis (CRPIX3/CRVAL3/CDELT3,
@@ -756,12 +620,13 @@ object ScanOps {
     */
   val a35_fits_cube_wcs_cutout = OpQuery(
     (s, d) => {
-      val depth = t(s, d, "documents").count() / 64 + 2
-      val h = 64L
       // shares a25/a26's fixture (same planted cube — build-once, r8 #7)
       val path = graft.Util.fixtureOnce(
         s"cube_${d.replaceAll("[^a-zA-Z0-9]", "_")}_cut.fits")(p =>
-        graft.fits.FitsWriter.writeCubeFits(p, 64, h, depth))
+        graft.fits.FitsWriter.writeCubeFits(p, 64, 64L,
+          t(s, d, "documents").count() / 64 + 2))
+      val cube = FitsImage.image(path, 1)
+      val sp = cube.spec
       // the client's request: a26's pixel window [1, depth) × [16, 48) ×
       // [8, 40) EXPRESSED IN WORLD COORDINATES through the planted WCS
       val raLo = 180.0 - 8.0 / 256.0
@@ -769,26 +634,18 @@ object ScanOps {
       val decLo = -10.0 + 16.0 / 256.0
       val decHi = -10.0 + 47.0 / 256.0
       val velLo = 1000.5
-      val velHi = 1000.0 + 0.5 * (depth - 1).toDouble
-      val (wcs, x0, x1, y0, y1, z0, z1) = {
-        val raf = new java.io.RandomAccessFile(path, "r")
-        try {
-          raf.seek(0)
-          val sp = graft.fits.FitsFormat.locateImage(raf, 1)
-          val w = sp.wcs.getOrElse(throw new IllegalArgumentException(
-            "cube carries no linear WCS — sky-addressed cutout unavailable"))
-          val (xa, xb) = w.xRange(raLo, raHi, sp.width).getOrElse(
-            throw new IllegalArgumentException("RA box misses the frame"))
-          val (ya, yb) = w.yRange(decLo, decHi, sp.height).getOrElse(
-            throw new IllegalArgumentException("Dec box misses the frame"))
-          val (za, zb) = w.zRange(velLo, velHi, sp.depth).getOrElse(
-            throw new IllegalArgumentException(
-              "velocity box misses the cube or no spectral WCS axis"))
-          (w, xa, xb, ya, yb, za, zb)
-        } finally raf.close()
-      }
+      val velHi = 1000.0 + 0.5 * (sp.depth - 1).toDouble
+      val wcs = sp.wcs.getOrElse(throw new IllegalArgumentException(
+        "cube carries no linear WCS — sky-addressed cutout unavailable"))
+      val (x0, x1) = wcs.xRange(raLo, raHi, sp.width).getOrElse(
+        throw new IllegalArgumentException("RA box misses the frame"))
+      val (y0, y1) = wcs.yRange(decLo, decHi, sp.height).getOrElse(
+        throw new IllegalArgumentException("Dec box misses the frame"))
+      val (z0, z1) = wcs.zRange(velLo, velHi, sp.depth).getOrElse(
+        throw new IllegalArgumentException(
+          "velocity box misses the cube or no spectral WCS axis"))
       val (p3, v3, d3) = wcs.axis3.get
-      cubeCutoutFrame(s, path, z0, z1 + 1, y0, y1 + 1, x0.toInt, x1.toInt + 1)
+      cutout(s, cube.crop(y0, y1 + 1, x0.toInt, x1.toInt + 1, z0, z1 + 1))
         .select(col("z"),
           (lit(v3) + (col("z") + lit(1L) - lit(p3)) * lit(d3)).as("vel"),
           col("y"),
@@ -826,124 +683,15 @@ object ScanOps {
       |       END), ',') AS px
       |FROM zs CROSS JOIN ys ORDER BY z, y""".stripMargin)
 
-  /** Split count for a tile-compressed scan, derived from the DATA
-    * (r9 verdict #3 / next-round #5 — the a19 row-range convention on
-    * the tile axis): one task per ~1 MiB of decoded raster. The
-    * fixture's 64-px-wide tiles decode to 8-16 KiB, so small frames
-    * floor at min(totalTiles, 8) tasks (keep local[32] busy) while the
-    * grown ladder frames cross the byte target and split wider;
-    * production row-band tiles of survey frames run 0.5-4 MiB decoded,
-    * so the same rule lands at a few tiles per task there. The 4096
-    * cap bounds the LOCAL task count; a cluster deployment raises the
-    * per-task byte target (64-128 MiB) instead of leaning on the cap.
-    */
-  private[graft] def tileSplits(totalTiles: Long, tileBytes: Long): Int = {
-    val targetTaskBytes = 1L << 20
-    val byBytes = (totalTiles * math.max(1L, tileBytes) +
-      targetTaskBytes - 1) / targetTaskBytes
-    // never more splits than tiles (a tile is the indivisible unit, so
-    // extra partitions would just be empty tasks), never more than the
-    // local cap, and never fewer than the small-fixture floor
-    math.max(math.min(totalTiles, 8L),
-      math.min(math.min(byBytes, totalTiles), 4096L)).toInt
-  }
-
-  /** The a27/a28 read core: scan `nHdus` compressed-image extensions
-    * with TILE-boundary splits — each partition locates the HDUs, then
-    * positioned-reads ONLY its tiles' 1PB descriptors and heap blobs,
-    * decodes each tile independently (TileCodec), applies BSCALE/BZERO/
-    * ZBLANK (int) or NaN masking (float) and emits a19's per-row stats.
-    * Split count derives from tile count × decoded tile bytes (one
-    * driver-side header walk — `tileSplits`), and rows STREAM out per
-    * tile: the task owns the file handle via a completion listener (the
-    * FitsDataSource pattern), so no partition buffers its whole output
-    * (r9 verdict #3 retired the hard-coded 8 splits + `.toVector`).
-    */
-  private def tiledImageStats(s: SparkSession, path: String, nHdus: Int,
-      nTiles: Long): org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    val maxTileBytes = {
-      val raf = new java.io.RandomAccessFile(path, "r")
-      try (0 until nHdus).map { i =>
-        raf.seek(0)
-        val sp = graft.fits.FitsFormat.locateTiledImage(raf, i)
-        sp.tileRows.toLong * sp.width * sp.bytesPerPx
-      }.max finally raf.close()
-    }
-    val splits = tileSplits(nHdus.toLong * nTiles, maxTileBytes)
-    s.range(0, nHdus.toLong * nTiles, 1, splits).mapPartitions { rs =>
-      if (!rs.hasNext) Iterator.empty
-      else {
-        // opened lazily per non-empty split; mapPartitions always runs
-        // inside a task, so the completion listener closes the handle
-        // after the LAST row drains (or on task failure) — the iterator
-        // below can therefore stream instead of buffering
-        val raf = new java.io.RandomAccessFile(path, "r")
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => raf.close()))
-        val specs = (0 until nHdus).map { i =>
-          raf.seek(0); graft.fits.FitsFormat.locateTiledImage(raf, i)
-        }
-        val desc = new Array[Byte](8)
-        rs.flatMap { r =>
-          val hdu = (r / nTiles).toInt
-          val tIdx = r % nTiles
-          val sp = specs(hdu)
-          raf.seek(sp.descOffset(tIdx))
-          raf.readFully(desc)
-          val db = java.nio.ByteBuffer.wrap(desc)
-          val blobLen = db.getInt(0)
-          val heapOff = db.getInt(4).toLong
-          val blob = new Array[Byte](blobLen)
-          raf.seek(sp.heapStart + heapOff)
-          raf.readFully(blob)
-          val rows = sp.rowsInTile(tIdx)
-          val raw = graft.fits.TileCodec.decodeCell(sp.cmpType, blob,
-            rows * sp.width.toInt, sp.bytesPerPx, Some((sp.width.toInt, rows)))
-          val bb = java.nio.ByteBuffer.wrap(raw)
-          val w = sp.width.toInt
-          (0 until rows).iterator.map { ry =>
-            val y = tIdx * sp.tileRows + ry
-            var n = 0L; var sum = 0L
-            var mn = Long.MaxValue; var mx = Long.MinValue
-            var x = 0
-            while (x < w) {
-              if (sp.zbitpix == 16) {
-                val v = bb.getShort((ry * w + x) * 2).toLong
-                if (!sp.blank.contains(v)) {
-                  val q = (sp.bzero + sp.bscale * v).toLong // exact ints
-                  n += 1; sum += q
-                  if (q < mn) mn = q
-                  if (q > mx) mx = q
-                }
-              } else {
-                val v = bb.getFloat((ry * w + x) * 4)
-                if (!v.isNaN) {
-                  val q = (v * 4.0f).toLong // quarter-int pixels: exact
-                  n += 1; sum += q
-                  if (q < mn) mn = q
-                  if (q > mx) mx = q
-                }
-              }
-              x += 1
-            }
-            (hdu + 1L, y, n, sum, mn, mx)
-          }
-        }
-      }
-    }.toDF("hdu", "y", "n_valid", "sum_q", "min_q", "max_q")
-      .orderBy("hdu", "y")
-  }
-
   /** a27: tile-compressed FITS IMAGE source (ZIMAGE=T — fpack's DEFAULT
     * output, the shape a real archive serves FIRST; r8 verdict gap #4):
     * a19's planted frame goes out through writeTiledImageFits as two
     * compressed-image BINTABLEs — int16 rice-coded row-band tiles with
     * BSCALE/BZERO/ZBLANK, float32 GZIP_2 (shuffle+gzip) tiles with NaN
     * masking — and comes back via TILE-boundary splits: the global
-    * (hdu, tile) space is range-partitioned, each partition locates the
-    * compressed HDUs (locateTiledImage's walk), positioned-reads ONLY
-    * its tiles' 1PB descriptors and heap blobs, decodes each tile
+    * (hdu, tile) space is range-partitioned, each task of the FitsImage
+    * reader positioned-reads ONLY its tiles' 1PB descriptors and heap
+    * blobs, decodes each tile
     * independently (TileCodec), applies scaling/masking, and emits
     * a19's per-row stats. The oracle is a19's SQL VERBATIM — the d22
     * layout-independence trick on the storage axis: the hash gate
@@ -955,15 +703,13 @@ object ScanOps {
     */
   val a27_fits_image_tiled = OpQuery(
     (s, d) => {
-      import s.implicits._
-      val height = t(s, d, "documents").count() // fixture size, not data
-      val tileRows = 64
       // build-once scaffolding (r8 #7): the op under test is the READER
       val path = graft.Util.fixtureOnce(
         s"survey_ztiled_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")(p =>
-        graft.fits.FitsWriter.writeTiledImageFits(p, 64, height, tileRows))
-      val nTiles = (height + tileRows - 1) / tileRows
-      tiledImageStats(s, path, nHdus = 2, nTiles)
+        graft.fits.FitsWriter.writeTiledImageFits(p, 64,
+          t(s, d, "documents").count(), 64))
+      imageStats(s, Seq(FitsImage.tiledImage(path, 0), FitsImage.tiledImage(path, 1)))
+        .drop("z").orderBy("hdu", "y")
     },
     // a19's oracle VERBATIM: the hash gate proves the compressed layout
     // decodes to the identical raster (the d22 layout-independence trick)
@@ -1006,17 +752,16 @@ object ScanOps {
   val a28_fits_image_tiled_sink = OpQuery(
     (s, d) => {
       val height = t(s, d, "documents").count() // frame size, not data
-      val tileRows = 64
       val path = graft.Util.scratch(
         s"survey_ztsink_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")
       val rows = s.range(0, height, 1, 8)
         .select(col("id").as("y"),
           expr("transform(sequence(0, 63), x -> (3 * y + 5 * x + 7) % 251)")
             .as("px"))
-      graft.fits.FitsWriter.writeTiledImageDataFrame(path, rows, 64, tileRows,
+      graft.fits.FitsWriter.writeTiledImageDataFrame(path, rows, 64, 64,
         Seq("BSCALE" -> "2", "BZERO" -> "100", "ZBLANK" -> "250"))
-      val nTiles = (height + tileRows - 1) / tileRows
-      tiledImageStats(s, path, nHdus = 1, nTiles)
+      imageStats(s, Seq(FitsImage.tiledImage(path, 0)))
+        .drop("z").orderBy("hdu", "y")
     },
     // a19's int-HDU closed form (h1 only: this export writes the int16
     // extension; hdu = 1 is the emitted label for the first tiled HDU)
@@ -1044,66 +789,16 @@ object ScanOps {
     * the compressed-raster family (a27 read, a28 write, a29 lossy,
     * a30 cutout).
     */
-  /** The a30/a34 tile-granular int16 cutout core: rows y ∈ [y0, y1) and
-    * columns x ∈ [x0, x1) of the file's tiled ext #0, streamed per
-    * COVERING tile — splits from covering-tile count × decoded bytes,
-    * rows streamed with the task owning the file handle (the
-    * tiledImageStats convention, r9 #5). Returns (y, px) rows; callers
-    * append derived columns (a34's forward-WCS dec) and the final sort.
-    */
-  private def tiledCutoutFrame(s: SparkSession, path: String, tileRows: Int,
-      y0: Long, y1: Long, x0: Int, x1: Int): org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    val t0 = y0 / tileRows
-    val t1 = (y1 - 1) / tileRows // inclusive: tiles covering [y0, y1)
-    val splits = tileSplits(t1 - t0 + 1, 64L * tileRows * 2)
-    s.range(t0, t1 + 1, 1, splits).mapPartitions { ts =>
-      if (!ts.hasNext) Iterator.empty
-      else {
-        val raf = new java.io.RandomAccessFile(path, "r")
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => raf.close()))
-        raf.seek(0)
-        val sp = graft.fits.FitsFormat.locateTiledImage(raf, 0) // int16 ext
-        val desc = new Array[Byte](8)
-        ts.flatMap { tIdx =>
-          raf.seek(sp.descOffset(tIdx))
-          raf.readFully(desc)
-          val db = java.nio.ByteBuffer.wrap(desc)
-          val blob = new Array[Byte](db.getInt(0))
-          raf.seek(sp.heapStart + db.getInt(4).toLong)
-          raf.readFully(blob)
-          val rows = sp.rowsInTile(tIdx)
-          val w = sp.width.toInt
-          val raw = graft.fits.TileCodec.decodeCell(sp.cmpType, blob,
-            rows * w, sp.bytesPerPx, Some((w, rows)))
-          val bb = java.nio.ByteBuffer.wrap(raw)
-          val yLo = math.max(y0, tIdx * sp.tileRows)
-          val yHi = math.min(y1, tIdx * sp.tileRows + rows)
-          (yLo until yHi).iterator.map { y =>
-            val ry = (y - tIdx * sp.tileRows).toInt
-            val px = (x0 until x1).map { x =>
-              val v = bb.getShort((ry * w + x) * 2).toLong
-              if (sp.blank.contains(v)) "null"
-              else (sp.bzero + sp.bscale * v).toLong.toString
-            }
-            (y, px.mkString(","))
-          }
-        }
-      }
-    }.toDF("y", "px")
-  }
-
   val a30_fits_image_tiled_cutout = OpQuery(
     (s, d) => {
-      val height = t(s, d, "documents").count()
-      val tileRows = 64
       // shares a27's fixture (same planted file — build-once, r8 #7)
       val path = graft.Util.fixtureOnce(
         s"survey_ztiled_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")(p =>
-        graft.fits.FitsWriter.writeTiledImageFits(p, 64, height, tileRows))
-      tiledCutoutFrame(s, path, tileRows, height / 4, height / 2, 16, 48)
-        .orderBy("y")
+        graft.fits.FitsWriter.writeTiledImageFits(p, 64,
+          t(s, d, "documents").count(), 64))
+      val img = FitsImage.tiledImage(path, 0)
+      val h = img.spec.height
+      cutout(s, img.crop(h / 4, h / 2, 16, 48)).drop("z").orderBy("y")
     },
     // a20's oracle VERBATIM: compressed and plain cutouts must render
     // the identical pixels
@@ -1133,40 +828,32 @@ object ScanOps {
     */
   val a34_fits_wcs_cutout = OpQuery(
     (s, d) => {
-      import s.implicits._
-      val height = t(s, d, "documents").count()
-      val tileRows = 64
       // shares a27/a30's fixture (same planted file — build-once, r8 #7)
       val path = graft.Util.fixtureOnce(
         s"survey_ztiled_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")(p =>
-        graft.fits.FitsWriter.writeTiledImageFits(p, 64, height, tileRows))
+        graft.fits.FitsWriter.writeTiledImageFits(p, 64,
+          t(s, d, "documents").count(), 64))
+      val img = FitsImage.tiledImage(path, 0)
+      val sp = img.spec
       // the user's sky request: a30's pixel window [h/4, h/2) × [16, 48)
       // EXPRESSED IN WORLD COORDINATES through the planted WCS — what a
       // cutout-service client actually sends
-      val decLo = -10.0 + (height / 4).toDouble / 256.0
-      val decHi = -10.0 + (height / 2 - 1).toDouble / 256.0
+      val decLo = -10.0 + (sp.height / 4).toDouble / 256.0
+      val decHi = -10.0 + (sp.height / 2 - 1).toDouble / 256.0
       val raLo = 180.0 - 16.0 / 256.0
       val raHi = 180.0 + 15.0 / 256.0
-      // driver-side header walk: parse the WCS, invert the sky box
-      val (wcs, x0, x1, y0, y1) = {
-        val raf = new java.io.RandomAccessFile(path, "r")
-        try {
-          raf.seek(0)
-          val sp = graft.fits.FitsFormat.locateTiledImage(raf, 0)
-          val w = sp.wcs.getOrElse(throw new IllegalArgumentException(
-            "image carries no linear WCS — sky-addressed cutout unavailable"))
-          val (xa, xb) = w.xRange(raLo, raHi, sp.width).getOrElse(
-            throw new IllegalArgumentException("RA box misses the frame"))
-          val (ya, yb) = w.yRange(decLo, decHi, sp.height).getOrElse(
-            throw new IllegalArgumentException("Dec box misses the frame"))
-          (w, xa, xb, ya, yb)
-        } finally raf.close()
-      }
-      // the pixel box runs the SAME tile-granular core as a30; dec is
+      // invert the sky box through the header's WCS
+      val wcs = sp.wcs.getOrElse(throw new IllegalArgumentException(
+        "image carries no linear WCS — sky-addressed cutout unavailable"))
+      val (x0, x1) = wcs.xRange(raLo, raHi, sp.width).getOrElse(
+        throw new IllegalArgumentException("RA box misses the frame"))
+      val (y0, y1) = wcs.yRange(decLo, decHi, sp.height).getOrElse(
+        throw new IllegalArgumentException("Dec box misses the frame"))
+      // the pixel box runs the SAME tile-granular read as a30; dec is
       // the forward transform re-spelled as a Column with the identical
       // IEEE op order as Wcs.world2 (crval2 + (y + 1 − crpix2)·cdelt2 —
       // every step exact on the planted dyadics)
-      tiledCutoutFrame(s, path, tileRows, y0, y1 + 1, x0.toInt, x1.toInt + 1)
+      cutout(s, img.crop(y0, y1 + 1, x0.toInt, x1.toInt + 1))
         .select(col("y"),
           (lit(wcs.crval2) +
             (col("y") + lit(1L) - lit(wcs.crpix2)) * lit(wcs.cdelt2)).as("dec"),
@@ -1268,29 +955,22 @@ object ScanOps {
     */
   val a38_fits_wcs_rotated = OpQuery(
     (s, d) => {
-      val height = t(s, d, "documents").count()
-      val tileRows = 64
       val path = graft.Util.fixtureOnce(
         s"survey_rot_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")(p =>
-        graft.fits.FitsWriter.writeTiledImageFits(p, 64, height, tileRows,
-          graft.fits.FitsWriter.wcsRotCards))
-      val (x0, x1, y0, y1) = {
-        val raf = new java.io.RandomAccessFile(path, "r")
-        try {
-          raf.seek(0)
-          val sp = graft.fits.FitsFormat.locateTiledImage(raf, 0)
-          val w = sp.wcsCd.getOrElse(throw new IllegalArgumentException(
-            "image carries no CD-matrix WCS — rotated cutout unavailable"))
-          // the client's request: the sky bbox of the a30 pixel
-          // window's corners (centers), forward-rotated — all dyadic
-          val cs = for (x <- Seq(16L, 47L); y <- Seq(height / 4, height / 2 - 1))
-            yield w.world(x, y)
-          cdCornerBox(w, cs.map(_._1).min, cs.map(_._1).max,
-            cs.map(_._2).min, cs.map(_._2).max, sp.width, sp.height)
-        } finally raf.close()
-      }
-      tiledCutoutFrame(s, path, tileRows, y0, y1 + 1, x0.toInt, x1.toInt + 1)
-        .orderBy("y")
+        graft.fits.FitsWriter.writeTiledImageFits(p, 64,
+          t(s, d, "documents").count(), 64, graft.fits.FitsWriter.wcsRotCards))
+      val img = FitsImage.tiledImage(path, 0)
+      val sp = img.spec
+      val w = sp.wcsCd.getOrElse(throw new IllegalArgumentException(
+        "image carries no CD-matrix WCS — rotated cutout unavailable"))
+      // the client's request: the sky bbox of the a30 pixel window's
+      // corners (centers), forward-rotated — all dyadic
+      val cs = for (x <- Seq(16L, 47L); y <- Seq(sp.height / 4, sp.height / 2 - 1))
+        yield w.world(x, y)
+      val (x0, x1, y0, y1) = cdCornerBox(w, cs.map(_._1).min, cs.map(_._1).max,
+        cs.map(_._2).min, cs.map(_._2).max, sp.width, sp.height)
+      cutout(s, img.crop(y0, y1 + 1, x0.toInt, x1.toInt + 1))
+        .drop("z").orderBy("y")
     },
     // closed-form mirror: forward-rotate the window corners (ra = 180 +
     // s·(dy − dx), dec = −10 + s·(dx + dy); dx = x+1−32, dy = y), take
@@ -1337,31 +1017,24 @@ object ScanOps {
     */
   val a39_fits_wcs_tan = OpQuery(
     (s, d) => {
-      val height = t(s, d, "documents").count()
-      val tileRows = 64
       val path = graft.Util.fixtureOnce(
         s"survey_tan_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")(p =>
-        graft.fits.FitsWriter.writeTiledImageFits(p, 64, height, tileRows,
-          graft.fits.FitsWriter.wcsTanCards))
-      val (x0, x1, y0, y1) = {
-        val raf = new java.io.RandomAccessFile(path, "r")
-        try {
-          raf.seek(0)
-          val sp = graft.fits.FitsFormat.locateTiledImage(raf, 0)
-          val w = sp.wcsCd.getOrElse(throw new IllegalArgumentException(
-            "image carries no CD-matrix WCS — TAN cutout unavailable"))
-          require(w.tan, "frame is not TAN-projected")
-          // quarter-pixel request corners (see the margin note above)
-          val cs = for (x <- Seq(16.25, 47.25);
-                        y <- Seq(height / 4 + 0.25, height / 2 - 0.75))
-            yield w.worldAt(x, y)
-          cdCornerBox(w, cs.map(_._1).min, cs.map(_._1).max,
-            cs.map(_._2).min, cs.map(_._2).max, sp.width, sp.height,
-            strictMargin = true)
-        } finally raf.close()
-      }
-      tiledCutoutFrame(s, path, tileRows, y0, y1 + 1, x0.toInt, x1.toInt + 1)
-        .orderBy("y")
+        graft.fits.FitsWriter.writeTiledImageFits(p, 64,
+          t(s, d, "documents").count(), 64, graft.fits.FitsWriter.wcsTanCards))
+      val img = FitsImage.tiledImage(path, 0)
+      val sp = img.spec
+      val w = sp.wcsCd.getOrElse(throw new IllegalArgumentException(
+        "image carries no CD-matrix WCS — TAN cutout unavailable"))
+      require(w.tan, "frame is not TAN-projected")
+      // quarter-pixel request corners (see the margin note above)
+      val cs = for (x <- Seq(16.25, 47.25);
+                    y <- Seq(sp.height / 4 + 0.25, sp.height / 2 - 0.75))
+        yield w.worldAt(x, y)
+      val (x0, x1, y0, y1) = cdCornerBox(w, cs.map(_._1).min, cs.map(_._1).max,
+        cs.map(_._2).min, cs.map(_._2).max, sp.width, sp.height,
+        strictMargin = true)
+      cutout(s, img.crop(y0, y1 + 1, x0.toInt, x1.toInt + 1))
+        .drop("z").orderBy("y")
     },
     // the same gnomonic chain spelled in SQL: forward TAN of the
     // quarter-pixel corners (ξ/η → ρ → atan/asin/atan2), sky bbox,
@@ -1416,8 +1089,8 @@ object ScanOps {
     * writeTiledCubeFits as ZIMAGE=T BINTABLEs with PER-PLANE row-band
     * tiles (ZTILE3 = 1 — a tile never straddles planes, so every tile
     * decodes independently) and come back via (hdu, tile)-range splits
-    * through the SAME locateTiledImage walk and TileCodec decode a27
-    * uses, now addressing tiles plane-major (planeOf/firstRowInPlane —
+    * through the SAME FitsImage reader a27 uses, now addressing tiles
+    * plane-major (planeOf/firstRowInPlane —
     * the a25 (plane, row) addressing at tile granularity). All four
     * ZBITPIX codes of the plain cube ride through: 8 (unsigned +
     * scaling), 32 (scaling), 64 (high-byte stress via ×2654435761,
@@ -1427,151 +1100,22 @@ object ScanOps {
     * identically, so wrong plane-major addressing, per-plane band
     * geometry, rice width, or sentinel handling all hash-mismatch.
     * Splits derive from tile count × decoded bytes and rows stream per
-    * tile (the r10 tiledImageStats convention).
+    * tile.
     */
   val a31_fits_cube_tiled = OpQuery(
     (s, d) => {
-      import s.implicits._
-      val depth = t(s, d, "documents").count() / 64 + 2 // ≥2 planes, a25's rule
-      val h = 64L
-      val tileRows = 16 // 4 bands per plane: real per-plane tile geometry
-      // build-once scaffolding (r8 #7): the op under test is the READER
+      // build-once scaffolding (r8 #7): the op under test is the READER;
+      // 4 bands per plane (ZTILE2 = 16): real per-plane tile geometry
       val path = graft.Util.fixtureOnce(
         s"cube_ztiled_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")(p =>
-        graft.fits.FitsWriter.writeTiledCubeFits(p, 64, h, depth, tileRows))
-      val tilesPerPlane = (h + tileRows - 1) / tileRows
-      val nTiles = depth * tilesPerPlane
-      val splits = tileSplits(4L * nTiles, tileRows.toLong * 64 * 8)
-      s.range(0, 4L * nTiles, 1, splits).mapPartitions { rs =>
-        if (!rs.hasNext) Iterator.empty
-        else {
-          val raf = new java.io.RandomAccessFile(path, "r")
-          Option(org.apache.spark.TaskContext.get()).foreach(
-            _.addTaskCompletionListener[Unit](_ => raf.close()))
-          val specs = (0 until 4).map { i =>
-            raf.seek(0); graft.fits.FitsFormat.locateTiledImage(raf, i)
-          }
-          val desc = new Array[Byte](8)
-          rs.flatMap { r =>
-            val hdu = (r / nTiles).toInt
-            val tIdx = r % nTiles
-            val sp = specs(hdu)
-            raf.seek(sp.descOffset(tIdx))
-            raf.readFully(desc)
-            val db = java.nio.ByteBuffer.wrap(desc)
-            val blob = new Array[Byte](db.getInt(0))
-            raf.seek(sp.heapStart + db.getInt(4).toLong)
-            raf.readFully(blob)
-            val rows = sp.rowsInTile(tIdx)
-            val w = sp.width.toInt
-            val z = sp.planeOf(tIdx)
-            val y0 = sp.firstRowInPlane(tIdx)
-            val raw = graft.fits.TileCodec.decodeCell(sp.cmpType, blob,
-              rows * w, sp.bytesPerPx, Some((w, rows)))
-            val bb = java.nio.ByteBuffer.wrap(raw)
-            (0 until rows).iterator.map { ry =>
-              var n = 0L; var sum = 0L
-              var mn = Long.MaxValue; var mx = Long.MinValue
-              var x = 0
-              while (x < w) {
-                var valid = true
-                var q = 0L
-                sp.zbitpix match {
-                  case 8 =>
-                    val v = (raw(ry * w + x) & 0xff).toLong // unsigned, FITS 4.0
-                    if (sp.blank.contains(v)) valid = false
-                    else q = (sp.bzero + sp.bscale * v).toLong // exact ints
-                  case 32 =>
-                    val v = bb.getInt((ry * w + x) * 4).toLong
-                    if (sp.blank.contains(v)) valid = false
-                    else q = (sp.bzero + sp.bscale * v).toLong
-                  case 64 =>
-                    val v = bb.getLong((ry * w + x) * 8)
-                    if (sp.blank.contains(v)) valid = false else q = v
-                  case -64 =>
-                    val v = bb.getDouble((ry * w + x) * 8)
-                    if (v.isNaN) valid = false
-                    else q = (v * 8.0).toLong // eighth-integer pixels: exact
-                }
-                if (valid) {
-                  n += 1; sum += q
-                  if (q < mn) mn = q
-                  if (q > mx) mx = q
-                }
-                x += 1
-              }
-              (hdu + 1L, z, y0 + ry, n, sum, mn, mx)
-            }
-          }
-        }
-      }.toDF("hdu", "z", "y", "n_valid", "sum_q", "min_q", "max_q")
+        graft.fits.FitsWriter.writeTiledCubeFits(p, 64, 64L,
+          t(s, d, "documents").count() / 64 + 2, 16))
+      imageStats(s, (0 until 4).map(FitsImage.tiledImage(path, _)))
         .orderBy("hdu", "z", "y")
     },
     // a25's oracle VERBATIM: compressed and plain cubes must decode to
     // the identical voxel field (the a27 trick on the cube axis)
     a25_fits_cube_source.oracle.get)
-
-  /** The a29/a33 read core: scan ONE lossy-quantized compressed-image
-    * extension (the 24-byte [1PB, ZSCALE, ZZERO] record layout) with
-    * tile-boundary splits — decode each tile per its ZCMPTYPE (rice for
-    * a29, H-transform for a33 — the spec's card dispatches, so the SAME
-    * reader serves both codecs), apply the per-tile dequantization and
-    * ZBLANK masking, and emit the exact floor(v·10⁶) per-row stats.
-    * tileSplits parallelism + streamed rows (the r10 convention).
-    */
-  private def quantizedImageStats(s: SparkSession, path: String,
-      nTiles: Long, tileRows: Int): org.apache.spark.sql.DataFrame = {
-    import s.implicits._
-    val splits = tileSplits(nTiles, 64L * tileRows * 2)
-    s.range(0, nTiles, 1, splits).mapPartitions { ts =>
-      if (!ts.hasNext) Iterator.empty
-      else {
-        val raf = new java.io.RandomAccessFile(path, "r")
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => raf.close()))
-        raf.seek(0)
-        val sp = graft.fits.FitsFormat.locateTiledImage(raf, 0)
-        require(sp.quant, "expected the quantized record layout")
-        val rec = new Array[Byte](sp.recordBytes)
-        ts.flatMap { tIdx =>
-          raf.seek(sp.descOffset(tIdx))
-          raf.readFully(rec)
-          val rb = java.nio.ByteBuffer.wrap(rec)
-          val blobLen = rb.getInt(0)
-          val heapOff = rb.getInt(4).toLong
-          val zscale = rb.getDouble(8)
-          val zzero = rb.getDouble(16)
-          val blob = new Array[Byte](blobLen)
-          raf.seek(sp.heapStart + heapOff)
-          raf.readFully(blob)
-          val rows = sp.rowsInTile(tIdx)
-          val w = sp.width.toInt
-          val raw = graft.fits.TileCodec.decodeCell(sp.cmpType, blob,
-            rows * w, 2, Some((w, rows))) // quantized codes are int16
-          val bb = java.nio.ByteBuffer.wrap(raw)
-          (0 until rows).iterator.map { ry =>
-            val y = tIdx * sp.tileRows + ry
-            var n = 0L; var sum = 0L
-            var mn = Long.MaxValue; var mx = Long.MinValue
-            var x = 0
-            while (x < w) {
-              val q = bb.getShort((ry * w + x) * 2).toLong
-              if (!sp.blank.contains(q)) {
-                val v = zzero + q.toDouble * zscale // the decode rule
-                val q6 = math.floor(v * 1.0e6).toLong // exact-IEEE gate
-                n += 1; sum += q6
-                if (q6 < mn) mn = q6
-                if (q6 > mx) mx = q6
-              }
-              x += 1
-            }
-            (y, n, sum, mn, mx)
-          }
-        }
-      }
-    }.toDF("y", "n_valid", "sum_q6", "min_q6", "max_q6")
-      .orderBy("y")
-  }
 
   /** a29: lossy-QUANTIZED float compressed image (fpack's float
     * DEFAULT — RICE is integer-only, so real archives quantize floats
@@ -1590,14 +1134,12 @@ object ScanOps {
     */
   val a29_fits_image_qfloat = OpQuery(
     (s, d) => {
-      import s.implicits._
-      val height = t(s, d, "documents").count() // fixture size, not data
-      val tileRows = 64
       // build-once scaffolding (r8 #7): the op under test is the READER
       val path = graft.Util.fixtureOnce(
         s"survey_qfloat_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")(p =>
-        graft.fits.FitsWriter.writeQuantizedImageFits(p, 64, height, tileRows))
-      quantizedImageStats(s, path, (height + tileRows - 1) / tileRows, tileRows)
+        graft.fits.FitsWriter.writeQuantizedImageFits(p, 64,
+          t(s, d, "documents").count(), 64))
+      quantizedStats(s, path)
     },
     """WITH b AS (SELECT (SELECT count(*) FROM documents) AS h),
       |ys AS (SELECT unnest(range(0, (SELECT h FROM b))) AS y),
@@ -1642,14 +1184,12 @@ object ScanOps {
     */
   val a33_fits_image_hcomp = OpQuery(
     (s, d) => {
-      val height = t(s, d, "documents").count() // fixture size, not data
-      val tileRows = 64
       // build-once scaffolding (r8 #7): the op under test is the READER
       val path = graft.Util.fixtureOnce(
         s"survey_hcomp_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")(p =>
-        graft.fits.FitsWriter.writeQuantizedImageFits(p, 64, height, tileRows,
-          "GRAFT_HCOMP_1"))
-      quantizedImageStats(s, path, (height + tileRows - 1) / tileRows, tileRows)
+        graft.fits.FitsWriter.writeQuantizedImageFits(p, 64,
+          t(s, d, "documents").count(), 64, "GRAFT_HCOMP_1"))
+      quantizedStats(s, path)
     },
     // a29's oracle VERBATIM: rice and H-transform are two lossless
     // codings of the SAME quantized raster, so both must hash-match the
@@ -1673,49 +1213,21 @@ object ScanOps {
   val a32_fits_image_mask = OpQuery(
     (s, d) => {
       import s.implicits._
-      val height = t(s, d, "documents").count() // fixture size, not data
-      val tileRows = 64
       // build-once scaffolding (r8 #7): the op under test is the READER
       val path = graft.Util.fixtureOnce(
         s"survey_mask_${d.replaceAll("[^a-zA-Z0-9]", "_")}.fits")(p =>
-        graft.fits.FitsWriter.writeMaskImageFits(p, 64, height, tileRows))
-      val nTiles = (height + tileRows - 1) / tileRows
-      val splits = tileSplits(nTiles, 64L * tileRows * 2)
-      s.range(0, nTiles, 1, splits).mapPartitions { ts =>
-        if (!ts.hasNext) Iterator.empty
-        else {
-          val raf = new java.io.RandomAccessFile(path, "r")
-          Option(org.apache.spark.TaskContext.get()).foreach(
-            _.addTaskCompletionListener[Unit](_ => raf.close()))
-          raf.seek(0)
-          val sp = graft.fits.FitsFormat.locateTiledImage(raf, 0)
-          val desc = new Array[Byte](8)
-          ts.flatMap { tIdx =>
-            raf.seek(sp.descOffset(tIdx))
-            raf.readFully(desc)
-            val db = java.nio.ByteBuffer.wrap(desc)
-            val blob = new Array[Byte](db.getInt(0))
-            raf.seek(sp.heapStart + db.getInt(4).toLong)
-            raf.readFully(blob)
-            val rows = sp.rowsInTile(tIdx)
-            val w = sp.width.toInt
-            val raw = graft.fits.TileCodec.decodeCell(sp.cmpType, blob,
-              rows * w, sp.bytesPerPx, Some((w, rows)))
-            val bb = java.nio.ByteBuffer.wrap(raw)
-            (0 until rows).iterator.map { ry =>
-              val y = tIdx * sp.tileRows + ry
-              var n0 = 0L; var n1 = 0L; var n2 = 0L; var wsum = 0L
-              var x = 0
-              while (x < w) {
-                val m = bb.getShort((ry * w + x) * 2).toLong
-                if (m == 0) n0 += 1 else if (m == 1) n1 += 1 else n2 += 1
-                wsum += m * (x + 1)
-                x += 1
-              }
-              (y, n0, n1, n2, wsum)
-            }
-          }
+        graft.fits.FitsWriter.writeMaskImageFits(p, 64,
+          t(s, d, "documents").count(), 64))
+      FitsImage.rows(s, Seq(FitsImage.tiledImage(path, 0))) { p =>
+        var n0 = 0L; var n1 = 0L; var n2 = 0L; var wsum = 0L
+        var i = 0
+        while (i < p.width) {
+          val m = p.long(i)
+          if (m == 0) n0 += 1 else if (m == 1) n1 += 1 else n2 += 1
+          wsum += m * (p.x0 + i + 1)
+          i += 1
         }
+        (p.y, n0, n1, n2, wsum)
       }.toDF("y", "n0", "n1", "n2", "wsum").orderBy("y")
     },
     """WITH ys AS (SELECT unnest(range(0, (SELECT count(*) FROM documents))) AS y),
@@ -2142,26 +1654,18 @@ object ScanOps {
       val imgPath = graft.Util.scratch("a23_survey.fits")
       graft.fits.FitsWriter.writeImageFits(imgPath, 64,
         t(s, d, "documents").count())
-      s.createDataset(Seq(("nation_fits", tblPath), ("survey_fits", imgPath)))
-        .repartition(2)
-        .mapPartitions { it =>
-          it.flatMap { case (label, path) =>
-            val raf = new java.io.RandomAccessFile(path, "r")
-            val hdus =
-              try graft.fits.FitsFormat.listHdus(raf, raf.length())
-              finally raf.close()
-            hdus.zipWithIndex.map { case (cards, i) =>
-              def num(k: String): Long =
-                cards.get(k).map(_.trim.toLong).getOrElse(0L)
-              val kind =
-                if (i == 0) "PRIMARY"
-                else cards.get("XTENSION").map(_.trim).getOrElse("UNKNOWN")
-              val nCols =
-                if (kind == "BINTABLE" || kind == "TABLE") num("TFIELDS")
-                else num("NAXIS1")
-              (label, i.toLong, kind, num("NAXIS2"), nCols)
-            }
-          }
+      val labels = Map(tblPath -> "nation_fits", imgPath -> "survey_fits")
+      FitsImage.headers(s, Seq(tblPath, imgPath))
+        .map { case (path, i, cards) =>
+          def num(k: String): Long =
+            cards.get(k).map(_.trim.toLong).getOrElse(0L)
+          val kind =
+            if (i == 0) "PRIMARY"
+            else cards.get("XTENSION").map(_.trim).getOrElse("UNKNOWN")
+          val nCols =
+            if (kind == "BINTABLE" || kind == "TABLE") num("TFIELDS")
+            else num("NAXIS1")
+          (labels(path), i.toLong, kind, num("NAXIS2"), nCols)
         }
         .toDF("fname", "hdu", "kind", "n_rows", "n_cols")
         .orderBy("fname", "hdu")
@@ -2212,18 +1716,12 @@ object ScanOps {
               graft.fits.FitsWriter.hierarchCard(
                 "ESO TEL AIRM START", "1.203", quote = false))
       }
-      s.createDataset(Seq(path)).repartition(1)
-        .mapPartitions { it =>
-          it.flatMap { p =>
-            val raf = new java.io.RandomAccessFile(p, "r")
-            val hdus =
-              try graft.fits.FitsFormat.listHdus(raf, raf.length())
-              finally raf.close()
-            val cards = hdus(1) // the BINTABLE extension
-            Seq("PROVENAN", "HIERARCH ESO DET CHIP ID",
-              "HIERARCH ESO TEL AIRM START")
-              .flatMap(k => cards.get(k).map(v => (k, v)))
-          }
+      FitsImage.headers(s, Seq(path))
+        .filter(_._2 == 1) // the BINTABLE extension
+        .flatMap { case (_, _, cards) =>
+          Seq("PROVENAN", "HIERARCH ESO DET CHIP ID",
+            "HIERARCH ESO TEL AIRM START")
+            .flatMap(k => cards.get(k).map(v => (k, v)))
         }
         .toDF("key", "value").orderBy("key")
     },

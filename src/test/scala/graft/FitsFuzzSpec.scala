@@ -718,4 +718,57 @@ class FitsFuzzSpec extends SparkTestBase {
     val e = intercept[java.io.IOException](readSplits(parts, sch))
     assert(isLoud(e, p) && e.getMessage.contains("decompressed to"), e.getMessage)
   }
+
+  /** The exception chain's messages, outermost first. */
+  private def chain(t: Throwable): Seq[Throwable] =
+    Option(t).toSeq.flatMap(x => x +: chain(x.getCause))
+
+  /** An image read's failure: an IOException (not a bare EOF) naming the
+    * file, the image HDU and the byte offset.
+    */
+  private def loudImage(e: Throwable, path: String, hdu: String, what: String,
+      offset: Long): Boolean =
+    chain(e).exists { x =>
+      x.isInstanceOf[java.io.IOException] && !x.isInstanceOf[java.io.EOFException] &&
+        Seq(s"'$path'", hdu, what, s"at byte offset $offset").forall(x.getMessage.contains)
+    }
+
+  test("a sign-flipped tile length fails the image read naming the file, HDU and offset") {
+    import spark.implicits._
+    val src = graft.Util.scratch("img_tile_flip_src.fits")
+    FitsWriter.writeTiledImageFits(src, 64, 300L, 64)
+    val sp = graft.fits.FitsImage.tiledImage(src, 0).spec
+      .asInstanceOf[FitsFormat.TiledImageSpec]
+    assert(sp.heapSize == sp.pcount && sp.pcount > 0)
+    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(src))
+    val recAt = sp.descOffset(2)
+    bytes(recAt.toInt) = (bytes(recAt.toInt) | 0x80).toByte // tile 2's length < 0
+    val p = graft.Util.scratch("img_tile_flip.fits")
+    java.nio.file.Files.write(java.nio.file.Paths.get(p), bytes)
+    val e = intercept[Exception](graft.fits.FitsImage.rows(spark,
+      Seq(graft.fits.FitsImage.tiledImage(p, 0)))(_.y).collect())
+    assert(loudImage(e, p, "tiled image HDU #0", "tile 2: descriptor out of range", recAt),
+      chain(e).map(_.toString).mkString(" | "))
+    // the untouched file reads every row
+    assert(graft.fits.FitsImage.rows(spark,
+      Seq(graft.fits.FitsImage.tiledImage(src, 0)))(_.y).collect().sorted.toSeq ==
+      (0L until 300L))
+  }
+
+  test("an image truncated mid-row fails the read naming the file, HDU and offset") {
+    import spark.implicits._
+    val full = graft.Util.scratch("img_trunc_full.fits")
+    FitsWriter.writeImageFits(full, 64, 40L)
+    val sp = graft.fits.FitsImage.image(full, 0).spec.asInstanceOf[FitsFormat.ImageSpec]
+    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(full))
+    val p = graft.Util.scratch("img_trunc.fits")
+    // the header stays whole; row 10 of the int16 frame is cut in half
+    java.nio.file.Files.write(java.nio.file.Paths.get(p),
+      bytes.take((sp.rowOffset(0, 10) + sp.rowBytes / 2).toInt))
+    // one task per row of [5, 11): only row 10's task meets the cut
+    val img = graft.fits.FitsImage.image(p, 0).crop(5L, 11L, 0, 64)
+    val e = intercept[Exception](graft.fits.FitsImage.rows(spark, Seq(img))(_.y).collect())
+    assert(loudImage(e, p, "image HDU #0", "short read of 128 pixel bytes",
+      sp.rowOffset(0, 10)), chain(e).map(_.toString).mkString(" | "))
+  }
 }

@@ -38,6 +38,21 @@ class RepoHygieneSpec extends AnyFunSuite {
       s"raw control bytes found (use \\uXXXX escapes):\n${offenders.mkString("\n")}")
   }
 
+  test("operators read files through Hadoop FS: no RandomAccessFile or java.nio.file reads in ops/") {
+    // a reader that opens local files directly works only where every
+    // executor shares the driver's filesystem; FITS bytes go through
+    // graft.fits (FitsImage, the DSv2 reader), other files through Spark
+    val localRead = ("RandomAccessFile|Files\\.(read\\w*|lines|newInputStream|" +
+      "newBufferedReader|newByteChannel)\\(|FileChannel\\.open").r
+    val offenders = scalaSources("src/main/scala/graft/ops").flatMap { p =>
+      Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if localRead.findFirstIn(line).isDefined => s"$p:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(scalaSources("src/main/scala/graft/ops").nonEmpty, "ops/ sources not found")
+    assert(offenders.isEmpty, s"local file reads under ops/:\n${offenders.mkString("\n")}")
+  }
+
   test("doc operator totals match SparkEntry (SURVEY running total, README ops count, COVERAGE gated count)") {
     // the judge greps these totals line by line; a silent drift between
     // the docs and the actual surface reads as padding or staleness —

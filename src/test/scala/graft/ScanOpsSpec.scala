@@ -285,7 +285,7 @@ class ScanOpsSpec extends SparkTestBase {
   }
 
   test("tileSplits derives parallelism from the data: floor 8 small, grows with bytes") {
-    import graft.ops.ScanOps.tileSplits
+    import graft.fits.FitsImage.tileSplits
     // fixture geometry (64-px frames, 8-16 KiB decoded tiles): small
     // frames floor at min(totalTiles, 8); tiny files never over-split
     assert(tileSplits(3, 8192) == 3)
@@ -318,10 +318,10 @@ class ScanOpsSpec extends SparkTestBase {
         b1 + graft.fits.FitsFormat.locateImage(raf, 1).rowBytes
       } finally raf.close()
     }
-    val splits = graft.ops.ScanOps.tileSplits(h64, rowUnitBytes)
+    val splits = graft.fits.FitsImage.tileSplits(h64, rowUnitBytes)
     assert(splits > 8, s"64x frame still under-parallelized: $splits")
     // and the small fixture keeps the 8-task floor (no over-splitting)
-    assert(graft.ops.ScanOps.tileSplits(h64 / 64, rowUnitBytes) == 8)
+    assert(graft.fits.FitsImage.tileSplits(h64 / 64, rowUnitBytes) == 8)
   }
 
   test("a36: the footprint catalog prunes FILES — only the covering frames are read") {
