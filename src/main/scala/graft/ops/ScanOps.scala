@@ -917,8 +917,8 @@ object ScanOps {
       // grazing an integer could round the other way in the oracle's
       // engine and silently shift the cut by one pixel. The fuzz spec
       // asserts the planted corpus heights keep ≥ ~1e-3 margin, but the
-      // gate derives its cut from the RUNTIME documents.count() — a new
-      // corpus size could graze. strictMargin (set on oracle-compared
+      // gate derives its cut from the frame height, documents.count()
+      // when the fixture was built — a new corpus size could graze. strictMargin (set on oracle-compared
       // paths; covering-only callers don't need it — an exact-integer
       // outward cut still covers) refuses loudly instead of letting one
       // engine hash-mismatch.
